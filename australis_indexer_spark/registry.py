@@ -22,12 +22,13 @@ from __future__ import annotations
 
 import functools
 import os
-import tempfile
 import zipfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .scratch import scratch_root
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -43,13 +44,14 @@ def ensure_executor_pyfiles(spark: SparkSession) -> None:
     SparkSession from an arbitrary CWD, the workers' PYTHONPATH does not
     include this repo, so we ship the package the Spark-native way:
     `sc.addPyFile` with a zip (works identically on a real cluster).
+    The zip lives under the process-lifetime scratch root, removed at
+    exit, not right after `addPyFile`: the local executor may fetch added
+    files from their original path.
     """
     sc = spark.sparkContext
     if getattr(sc, "_aispark_pyfiles_added", False):
         return
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"australis_indexer_spark-{os.getpid()}.zip"
-    )
+    zpath = os.path.join(scratch_root(), f"australis_indexer_spark-{os.getpid()}.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):
             for fn in files:

@@ -12,6 +12,21 @@ Two profiles:
 - ``CLUSTER_CONF``            — the documented knob set for the 100 TB
                                 design point (1000-executor cluster); kept as
                                 data so tests can assert we ship it.
+
+Local Python workers fork from ``pydaemon``, not ``pyspark.daemon``. PySpark
+calls ``importlib.invalidate_caches()`` at the start of every task, and on
+CPython < 3.12 that makes each of a worker's cached zip importers re-read its
+archive's whole directory (pyspark.zip, py4j, the spark-core jar: about 26k
+entries). That cost about 0.3 s per pandas-UDF task on a reused worker,
+whatever the task's size: 16 tasks of a 160-row identity pandas UDF on a
+4-core host took 1.8 s, and 0.7 s from ``pydaemon``. ``pydaemon`` re-reads
+an archive only when it changed on disk. CPython 3.12 made the re-read lazy,
+so there it only hands over to ``pyspark.daemon``. The daemon starts before
+any ``addPyFile`` zip is visible, so the session puts the package root on
+the workers' PYTHONPATH, which also lets Python data sources plan from any
+working directory. Vanilla sessions (the driver harness) and cluster
+deployments still ship the package by ``addPyFile`` / ``--py-files``
+(``registry.ensure_executor_pyfiles``) and still pay the per-task cost.
 """
 
 from __future__ import annotations
@@ -19,6 +34,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package, for the Python workers' sys.path
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Tuned for the driver's harness: single JVM, local[32], 128 GiB box.
 _LOCAL_DEFAULTS: dict[str, str] = {
@@ -36,6 +54,9 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     # Arrow for pandas_udf / toPandas / createDataFrame(pandas)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # local Python workers fork from pydaemon (see the module docstring)
+    "spark.python.daemon.module": "australis_indexer_spark.pydaemon",
+    "spark.executorEnv.PYTHONPATH": _PKG_ROOT,
     # read only referenced nested fields out of deeply-nested structs
     # (the StreamerMessage schema is ~6 levels deep — SURVEY.md §1.2)
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",

@@ -70,10 +70,21 @@ def test_dedup_window_suppresses_duplicates(spark, dirs):
 
 
 def test_sink_is_height_bucketed_and_ordered(spark, dirs):
-    """T1/K2: sink partitions carry height buckets (partition-pruned replay)
-    and heights are contiguous/complete."""
-    write_stream_source(spark, dirs["src"])
-    run_pipeline(spark, dirs["src"], dirs["sink"], dirs["ckpt"])
+    """T1/K1/K2: sink partitions carry height buckets (partition-pruned
+    replay), heights are contiguous/complete, and every sink file holds
+    non-decreasing heights. The sink sorts within each file, so no
+    range-sampling job re-runs the stateful micro-batch plan: dedup state
+    counts each height once (a global orderBy reported twice the rows)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    write_stream_source(spark, dirs["src"])  # 6 files, 2 per micro-batch
+    q = run_pipeline(spark, dirs["src"], dirs["sink"], dirs["ckpt"])
+    state_rows = [
+        p.stateOperators[0].numRowsTotal for p in q.recentProgress if p.numInputRows
+    ]
+    assert state_rows == [16, 32, 48]
     out = spark.read.parquet(dirs["sink"])
     heights = sorted(r[0] for r in out.select("sequence_id").collect())
     assert heights == list(range(START, START + 48))
@@ -81,6 +92,11 @@ def test_sink_is_height_bucketed_and_ordered(spark, dirs):
     # replay of one bucket prunes the file listing to that bucket only
     pruned = out.filter(F.col("height_bucket") == heights[0] // 100_000)
     assert pruned.count() == 48  # all fixture heights share one bucket
+    files = glob.glob(os.path.join(dirs["sink"], "**", "*.parquet"), recursive=True)
+    assert files
+    for f in files:
+        in_file = pq.read_table(f, columns=["sequence_id"]).column(0).to_pylist()
+        assert in_file == sorted(in_file), f
 
 
 def test_streaming_complete_mode_equals_batch(spark, ops):

@@ -24,37 +24,41 @@ from pyspark.sql import functions as F
 def cents(c: Column | str, scale: int = 2) -> Column:
     """Exact integer representation of a fixed-point double column.
 
-    Computed as ``sign-mirrored floor(|y| + 0.5)`` instead of
-    ``round(y).cast(long)``: Spark's double ``round()`` allocates a
-    ``BigDecimal`` from the value's shortest decimal string PER ROW, which
-    made the cents conversion cost more than the aggregation it feeds
-    (measured at sf0.1: the Q1-shape aggregate dropped 0.47 → 0.22 s, the
-    whole cost of the 4 per-row rounds — guide §1.2 step 2 "per-task work").
-
-    Value-identical to ``round()`` for every |y| < 2**51, proven not
-    assumed: 0.5 is an exact multiple of ulp(y) there, so ``y + 0.5`` is
-    EXACT in IEEE and ``floor`` reproduces round-half-away-from-zero on the
-    binary value; the BigDecimal path rounds the shortest decimal STRING,
-    which cannot sit on the other side of X.5 from the binary value because
-    X.5 is itself representable (a string ≥ X.5 would re-parse to a double
-    ≥ X.5). Above 2**51 doubles are spaced ≥ 0.5 apart and carry no cents —
-    money columns are bounded far below (the test data's are < 10**7).
-    Verified empirically: zero mismatches vs round() over every money column
-    of every table at sf0.001/0.01/0.1, and the full oracle differential
-    stays value-exact (DIFFCHECK_r11)."""
+    Computed by ``fround`` instead of ``round(y).cast(long)``: Spark's
+    double ``round()`` allocates a ``BigDecimal`` from the value's shortest
+    decimal string PER ROW, which made the cents conversion cost more than
+    the aggregation it feeds (measured at sf0.1: the Q1-shape aggregate
+    dropped 0.47 → 0.22 s, the whole cost of the 4 per-row rounds — guide
+    §1.2 step 2 "per-task work"). Verified empirically: zero mismatches vs
+    round() over every money column of every table at sf0.001/0.01/0.1, and
+    the full oracle differential stays value-exact (DIFFCHECK_r11)."""
     col = F.col(c) if isinstance(c, str) else c
     return fround(col * (10**scale))
 
 
 def fround(y: Column) -> Column:
-    """Round-half-away-from-zero of a double expression as a LONG — the
-    floor form ``cents`` is built on (equivalence proof above): identical
-    to ``F.round(y).cast("long")`` for |y| < 2**51 without the per-row
-    BigDecimal. Use for any oracle-ROUND-matched quantization whose scale
-    is data-dependent (e.g. int8 quantization by 127/maxabs)."""
-    return F.when(y >= 0, F.floor(y + F.lit(0.5))).otherwise(
-        -F.floor(F.lit(0.5) - y)
-    )
+    """Round-half-away-from-zero of a double expression as a LONG:
+    ``t = floor(|y|); t + (|y| - t >= 0.5 ? 1 : 0)``, sign-mirrored.
+    Identical to ``F.round(y).cast("long")`` wherever that fits a long,
+    without the per-row BigDecimal. Use for any oracle-ROUND-matched
+    quantization, including ones whose scale is data-dependent (e.g. int8
+    quantization by 127/maxabs).
+
+    Proof, not assumption: ``|y| - t`` is EXACT for every double (for
+    |y| < 1, t = 0; for |y| ≥ 1, t ≤ |y| < 2t, so Sterbenz's lemma holds),
+    so the comparison rounds the binary value half away from zero. The
+    BigDecimal path rounds the shortest decimal STRING instead, which
+    cannot sit on the other side of X.5 from the binary value because X.5
+    is itself representable (a string ≥ X.5 would re-parse to a double
+    ≥ X.5). From 2**52 up every double is an integer and both return it.
+    The earlier ``floor(|y| + 0.5)`` form relied on ``|y| + 0.5`` being
+    exact, which fails only where the sum rounds up into the next binade:
+    |y| just below 0.5, where 0.49999999999999994 + 0.5 rounds to 1.0 and
+    gave ±1 instead of ROUND's 0."""
+    a = F.abs(y)
+    t = F.floor(a)
+    r = t + F.when(a - t >= F.lit(0.5), F.lit(1)).otherwise(F.lit(0))
+    return F.when(y >= 0, r).otherwise(-r)
 
 
 def dsum(c: Column | str, scale: int = 2) -> Column:

@@ -1,8 +1,8 @@
 """The config/parallelism-invariance class, pinned in CI.
 
 tools/config_invariance.py re-runs the FULL registry strict-exact under
-five perturbed cluster geometries (committed artifact: INVARIANCE_r4.txt,
-1230/1230). The full matrix is ~25 min, so CI pins the ops whose
+the perturbed cluster geometries (committed artifact: INVARIANCE_r11.txt).
+The full matrix is ~25 min, so CI pins the ops whose
 implementations genuinely lean on partition arithmetic or Python batch
 shape — the ones a geometry change would break first — under the two
 most aggressive profiles:

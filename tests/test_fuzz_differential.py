@@ -2,7 +2,7 @@
 
 tools/fuzz_differential.py regenerates the ten engine tables with a fresh
 seed-driven distribution and sweeps the strict Spark-vs-DuckDB diff over
-the full registry (committed artifact: FUZZCHECK_r4.txt). The full sweep
+the full registry (committed artifact: FUZZCHECK_r11.txt). The full sweep
 is ~13 min/seed, so CI pins (a) the generator's data contract and (b) a
 fast-op differential slice on one fixed seed — enough that a regression
 in the harness or a freshly introduced distribution coupling in a core op
@@ -21,7 +21,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tools.diffcheck import connect_oracle, run_ops  # noqa: E402
-from tools.fuzz_differential import gen_dataset  # noqa: E402
+from tools.fuzz_differential import gen_dataset, halfpoint_counts  # noqa: E402
 
 # Fast ops (sub-second at fuzz sizes) spanning the core families: agg,
 # join, window, set, dedup, text, sampling, similarity, semistructured.
@@ -248,7 +248,29 @@ REGRESSION_SLICES = [
     # whitespace class is now pinned explicitly as [ \t\n\r\f\x0B] on
     # both engines.
     ("edge", 250, {"text_fingerprint", "pipeline_index_build"}),
+    # halfpoint:255 plants embedding elements whose rounding input is
+    # exactly k+0.5 (x / maxabs * 127 in the int8 quantizer, x * 10000 in
+    # the drift monitor's cents(x, 4)): det.fround must round them half
+    # away from zero on the binary value, as the oracle's ROUND does
+    ("halfpoint", 255, {"embedding_quantize_int8", "sim_embedding_drift"}),
 ]
+
+
+def test_halfpoint_profile_plants_half_points(tmp_path):
+    """The halfpoint profile puts at least one element on a rounding half
+    point for each op it targets; the default profile plants none."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    def counts(profile):
+        d = tmp_path / profile
+        gen_dataset(255, str(d), profile=profile)
+        col = pq.read_table(d / "embeddings.parquet").column("embedding")
+        return halfpoint_counts(np.array(col.to_pylist(), dtype=np.float32))
+
+    n_quant, n_drift = counts("halfpoint")
+    assert n_quant >= 1 and n_drift >= 1, (n_quant, n_drift)
+    assert counts("default") == (0, 0)
 
 
 @pytest.mark.parametrize("profile,seed,names", REGRESSION_SLICES)

@@ -5,7 +5,7 @@ permutation + prime (997-row) row groups and strict-diffs Spark reading
 the SHUFFLED layout against DuckDB reading the ORIGINAL files — proving
 answers are functions of data values, never of physical row order or
 row-group boundaries (full-registry artifact: layout section of
-INVARIANCE_r4.txt, 246/246). The full run is ~8 min; CI pins the ops a
+INVARIANCE_r11.txt, 246/246). The full run is ~8 min; CI pins the ops a
 row-order change would break first — position-sensitive picks (argmax,
 mode, top-k, listagg), window frames, dedup winner selection, reservoir
 sampling — on a shuffled copy of the smoke dataset.

@@ -4,8 +4,9 @@
 One row per registered op: which round (if any) produced its latest green
 driver CORRECTNESS row, whether its latest driver row is red, or whether it
 has never been inside a driver window. This replaces archaeology across the
-CORRECTNESS_r*.json artifacts when planning the next rotation window
-(VERDICT r3 "Next round" #2).
+CORRECTNESS_r*.json artifacts. The table is in the walk order the ledger
+implies (``registry.walk_order``), so the next window is its first 50 rows.
+Regenerate it whenever a new CORRECTNESS_r*.json lands.
 
 Usage:
     python tools/certification.py            # rewrite CERTIFICATION.md
@@ -14,73 +15,57 @@ Usage:
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+from australis_indexer_spark.registry import (  # noqa: E402
+    collect_rows,
+    load_all,
+    walk_order,
+    walk_tier,
+)
 
-def _is_green(row: dict) -> bool:
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match") in (True, None)
-    )
-
-
-def collect_rows(max_round: int | None = None) -> dict[str, list[tuple[int, bool, str]]]:
-    """op -> [(round, green, note)] sorted by round.
-
-    ``max_round`` caps which driver artifacts are read — the ledger and the
-    rotation tests pin the rounds they were planned from, so a NEW
-    CORRECTNESS file landing at round end (after the builder's turns) does
-    not retroactively fail them in the judge's fresh pytest run."""
-    hist: dict[str, list[tuple[int, bool, str]]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r0*(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if max_round is not None and rnd > max_round:
-            continue
-        data = json.load(open(path))
-        for opname, row in data.items():
-            note = ""
-            if row.get("err"):
-                note = "err"
-            elif row.get("hash_match") is None:
-                note = "rows_only"
-            hist.setdefault(opname, []).append((rnd, _is_green(row), note))
-    for v in hist.values():
-        v.sort()
-    return hist
+WINDOW = 50  # ops the driver certifies per round
 
 
 def covered_rounds() -> int:
     """Highest round number among the artifacts present right now."""
-    rounds = [
-        int(m.group(1))
-        for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r0*(\d+)\.json$", path))
+    return max(
+        (r for rows in collect_rows().values() for r, _, _ in rows), default=0
+    )
+
+
+def _window_plan(walk: list[str], hist: dict, max_round: int) -> list[str]:
+    """The next window's make-up: how many of its slots come from each
+    walk tier (0 = never driver-seen or red-latest)."""
+    counts = sorted(Counter(walk_tier(hist.get(n)) for n in walk[:WINDOW]).items())
+    parts = [
+        f"{c} {f'r{t} greens' if t else 'never-seen or red-latest'}"
+        for t, c in counts
     ]
-    return max(rounds) if rounds else 0
+    stalest = f"r{counts[0][0]}" if counts and counts[0][0] else "no green evidence"
+    return [
+        f"- **r{max_round + 1} window = walk slots 1-{min(WINDOW, len(walk))}**: "
+        + ", ".join(parts) + ".",
+        f"- Stalest evidence: {stalest}. The walk sorts ops by the round of",
+        "  their latest driver row if it is green, else 0, then by name",
+        "  (`registry.walk_order`).",
+    ]
 
 
 def render(max_round: int | None = None) -> str:
-    sys.path.insert(0, REPO)
-    from australis_indexer_spark.registry import load_all
-
-    registry = load_all()
     if max_round is None:
         max_round = covered_rounds()
     hist = collect_rows(max_round)
+    walk = walk_order(load_all(), max_round)
 
     lines: list[str] = []
     n_green = n_red = n_never = 0
-    for i, name in enumerate(registry, 1):
+    for i, name in enumerate(walk, 1):
         rows = hist.get(name, [])
         greens = [r for r, g, _ in rows if g]
         if not rows:
@@ -100,39 +85,29 @@ def render(max_round: int | None = None) -> str:
             n_red += 1
         lines.append(f"| {i} | `{name}` | {status} | {detail} |")
 
-    total = len(registry)
+    total = len(walk)
     out = [
         "# CERTIFICATION — driver correctness ledger",
         "",
         f"Covers driver artifacts through round {max_round}.",
         "",
         "Generated by `tools/certification.py` from the driver's",
-        "`CORRECTNESS_r*.json` artifacts against the live registry order.",
+        "`CORRECTNESS_r*.json` artifacts, in the walk order they imply.",
         "`green` = the op's LATEST driver row matched the DuckDB oracle",
         "(rows + schema + value hash; `rows_only` when no oracle was",
         "registered that round). `RED-latest` = the op has a driver row and",
         "the most recent one failed. `never-driver-seen` = the ~50-op",
         "per-round window has not yet reached the op; its only evidence is",
-        "the builder's local diffcheck sweep (see DIFFCHECK_r*.txt).",
+        "the local diffcheck sweep (see DIFFCHECK_r11.txt).",
         "",
         f"**Totals: {total} registered ops — {n_green} green, "
         f"{n_red} red-latest, {n_never} never driver-seen.** "
-        f"Registry order below IS the driver's walk order: the next window "
-        f"certifies the first ~50 rows (stalest driver evidence first).",
+        f"The order below IS the driver's walk order: the next window "
+        f"certifies the first {WINDOW} rows (stalest driver evidence first).",
         "",
-        "## Window plan (VERDICT r9 #1 rotation, continued)",
+        "## Window plan",
         "",
-        "- **r10 window (executed) = 50/50 green**: the pinned stalest-first",
-        "  rotation — the 46 remaining r5 greens and the first 4 r6 greens.",
-        "  CORRECTNESS_r10 matches the committed plan exactly; every op's",
-        "  LATEST evidence stays green (0 red, 0 never-seen since r6).",
-        "- **r11 window = walk slots 1-50 as re-pinned**: pure stalest-first",
-        "  rotation continued. The full walk orders all 246 ops by latest",
-        "  green driver round ascending (name-sorted within a round); after",
-        "  r10 the stalest evidence is r6, so slots 1-46 are the 46 remaining",
-        "  r6 greens and slots 47-50 the first 4 r7 greens. Rotation",
-        "  insurance against silent regressions; no op ever goes more than",
-        "  ~5 rounds without fresh driver evidence.",
+        *_window_plan(walk, hist, max_round),
         "",
         "| # | op | latest driver status | round |",
         "|---|---|---|---|",

@@ -10,9 +10,11 @@ Differences from tools/diffcheck.py (the strict local differential):
   ``sources/batch.load_table`` must set what it needs at runtime).
 - Entry through ``__spark_entry__.py``'s ``queries()`` / ``oracle_sql()``
   — the driver's actual surface — rather than importing the registry.
-- Default op set: the first N (50) registry rows whose latest driver
-  CORRECTNESS row is not green, i.e. exactly the ops the next driver
-  window will certify.
+- Default op set: the first N (50) ops of the registry's walk order
+  (``registry.walk_order``), i.e. exactly the ops the next driver window
+  will certify.
+- The comparison itself is ``tools/diffcheck.run_ops``, so the sim also
+  fails any DecimalType output, which the driver's hash rejects.
 
 Usage:
     python tools/driver_sim.py [sf_dir] [n_window | op ...]
@@ -23,7 +25,6 @@ from __future__ import annotations
 import importlib.util
 import os
 import sys
-import time
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -31,10 +32,8 @@ from pyspark.sql import SparkSession
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# same strict normalization and the same view registration as the local
-# differential — one source of truth for both (round-6 tools review: a
-# private TABLES copy here would silently drop any table added later)
-from tools.diffcheck import _rows, connect_oracle  # noqa: E402
+from australis_indexer_spark.registry import OpSpec, load_all  # noqa: E402
+from tools.diffcheck import connect_oracle, run_ops  # noqa: E402
 
 
 def _entry_module():
@@ -47,31 +46,9 @@ def _entry_module():
 
 
 def _window_ops(n: int) -> list[str]:
-    spec = importlib.util.spec_from_file_location(
-        "certification", REPO / "tools" / "certification.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from australis_indexer_spark.registry import load_all
-
-    hist = mod.collect_rows()
-    walk = list(load_all())
-    out = []
-    for name in walk:
-        rows = hist.get(name, [])
-        if not (rows and rows[-1][1]):  # latest row missing or red
-            out.append(name)
-        if len(out) >= n:
-            break
-    if len(out) < n:
-        # Ledger closed or nearly closed (every op green-latest since r6):
-        # the walk is a stalest-first rotation, so the driver window PADS
-        # with the earliest registry rows not already selected — never an
-        # undersized window (round-7 review: a single red op must not
-        # shrink the window to 1 and skip the 49 re-certification slots).
-        picked = set(out)
-        out += [name for name in walk if name not in picked][: n - len(out)]
-    return out
+    # the walk puts never-seen and red-latest ops first, then the stalest
+    # greens, so the driver's next window is simply the walk prefix
+    return list(load_all())[:n]
 
 
 def main() -> int:
@@ -90,52 +67,17 @@ def main() -> int:
     else:
         names = _window_ops(50)
 
-    # the driver's session: vanilla, no engine configs
-    spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
     mod = _entry_module()
     qs, osql = mod.queries(), mod.oracle_sql()
-
-    con = connect_oracle(sf_dir)
-
-    n_pass = n_fail = n_rowsonly = 0
-    for name in names:
-        t0 = time.time()
-        try:
-            sdf = qs[name](spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        if name not in osql:
-            # rows-only op (oracle_sql omits it, matching spec.oracle=None):
-            # the real driver records the weaker rows-only check here, so
-            # the sim must not count it as a red (round-6 tools review)
-            print(f"rows  {name}: {len(sdf)} rows ({time.time() - t0:.1f}s) [rows-only]")
-            n_rowsonly += 1
-            continue
-        try:
-            odf = con.execute(osql[name]).fetch_df()
-            scols, srows = _rows(sdf)
-            ocols, orows = _rows(odf)
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        ok = scols == ocols and srows == orows
-        if ok:
-            print(f"PASS  {name}: {len(srows)} rows ({time.time() - t0:.1f}s)")
-            n_pass += 1
-        else:
-            why = (
-                f"columns spark={scols} oracle={ocols}"
-                if scols != ocols
-                else f"rows spark={len(srows)} oracle={len(orows)} or values differ"
-            )
-            print(f"FAIL  {name}: {why}")
-            n_fail += 1
-
-    tail = f", {n_rowsonly} rows-only" if n_rowsonly else ""
-    print(f"\n{n_pass} pass, {n_fail} fail{tail} (vanilla-session driver sim)")
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        print(f"unknown ops: {unknown}")
+        return 2
+    # the driver's session: vanilla, no engine configs
+    spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
+    # an op that oracle_sql() omits gets the driver's rows-only check
+    ops = {name: OpSpec(name, fn, osql.get(name)) for name, fn in qs.items()}
+    _, n_fail, _, _ = run_ops(spark, connect_oracle(sf_dir), ops, sf_dir, only=set(names))
     return 1 if n_fail else 0
 
 

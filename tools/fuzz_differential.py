@@ -104,6 +104,68 @@ def _cents(rng, lo_c: int, hi_c: int, n: int) -> np.ndarray:
     return rng.randint(lo_c, hi_c, size=n).astype(np.int64) / 100.0
 
 
+def _half_mask(y: np.ndarray) -> np.ndarray:
+    """Where a double equals k+0.5 or one of its two double neighbours."""
+    hit = np.zeros(y.shape, dtype=bool)
+    for z in (y, np.nextafter(y, np.inf), np.nextafter(y, -np.inf)):
+        hit |= np.modf(np.abs(z))[0] == 0.5
+    return hit
+
+
+def quantize_y(emb: np.ndarray) -> np.ndarray:
+    """``embedding_quantize_int8``'s rounding input, same arithmetic:
+    double(x) / double(maxabs) * 127 per element (0 for a zero vector)."""
+    v = emb.astype(np.float64)
+    m = np.abs(v).max(axis=1, keepdims=True)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(m > 0, v / m * 127, 0.0)
+
+
+def drift_y(emb: np.ndarray) -> np.ndarray:
+    """``sim_embedding_drift``'s rounding input: ``cents(x, 4)`` rounds
+    double(x) * 10000."""
+    return emb.astype(np.float64) * 10_000
+
+
+def halfpoint_counts(emb: np.ndarray) -> tuple[int, int]:
+    """Elements whose rounding input sits on a half point (or a double
+    neighbour of one) for the quantize and the drift op."""
+    return int(_half_mask(quantize_y(emb)).sum()), int(_half_mask(drift_y(emb)).sum())
+
+
+def _plant_halfpoints(rng: np.random.RandomState, emb: np.ndarray) -> None:
+    """Move a few elements of 32 vectors onto rounding half points, in place.
+
+    Half points are found by searching float32 candidates with the ops'
+    own arithmetic (``quantize_y``, ``drift_y``); each chosen element takes
+    the hit nearest its value. A quantize hit needs x / maxabs to be
+    exactly (2k+1)/254, so each quantize vector's largest element is first
+    raised to the next float32 of the form 127 q 2^-j. The double
+    neighbours of k+0.5 are checked too but are unreachable from float32
+    inputs: both products are exact or round onto k+0.5 itself."""
+    picks = rng.choice(len(emb), size=min(32, len(emb)), replace=False)
+    for n, r in enumerate(picks):
+        v = emb[r]
+        pos = rng.choice(64, size=8, replace=False)
+        if n % 2 == 0:
+            i = int(np.argmax(np.abs(v)))
+            a = float(abs(v[i]))
+            if a == 0.0:
+                continue
+            j = 21 - int(np.floor(np.log2(a)))
+            v[i] = np.copysign(np.float32(127 * int(np.ceil(a * 2.0**j / 127)) * 2.0**-j), v[i])
+            m = float(abs(v[i]))
+            cand = np.float32(m * (np.arange(127) + 0.5) / 127)
+            y = cand.astype(np.float64) / m * 127
+            pos = pos[pos != i]
+        else:
+            cand = np.float32((np.arange(2000) + 0.5) / 10_000)
+            y = drift_y(cand)
+        hits = cand[_half_mask(y)]
+        near = np.abs(np.abs(v[pos])[:, None] - hits[None, :]).argmin(axis=1)
+        v[pos] = np.copysign(hits[near], v[pos])
+
+
 def gen_dataset(seed: int, outdir: str, profile: str = "default") -> dict:
     """Write the ten engine tables with a fresh seed-driven distribution.
 
@@ -206,7 +268,14 @@ def gen_dataset(seed: int, outdir: str, profile: str = "default") -> dict:
     order/event/line carries NULL payload fields — the n=1 x missing
     interaction (a lone event of NULL type through every stream path,
     a single order with NULL priority through mode/rank, the whole
-    events table potentially one NULL measurement)."""
+    events table potentially one NULL measurement).
+
+    ``profile="halfpoint"`` plants float32 embedding elements whose
+    rounding input in ``embedding_quantize_int8`` (x / maxabs * 127) or
+    ``sim_embedding_drift`` (x * 10000) is exactly k+0.5, where a rounding
+    helper that is not half-away-from-zero on the binary value (half-even,
+    a rounded ``y + 0.5``, a BigDecimal of the decimal string) parts from
+    the oracle's ROUND. The other tables are the default profile's."""
     rng = np.random.RandomState(seed)
     chaos = profile in ("chaos", "mayhem")
     void = profile == "void"
@@ -601,6 +670,8 @@ def gen_dataset(seed: int, outdir: str, profile: str = "default") -> dict:
         zpos = rng.choice(n_vec, size=n_zero, replace=False)
         emb[zpos] = 0.0
         label[zpos] = k  # the origin "cluster"
+    if profile == "halfpoint":
+        _plant_halfpoints(rng, emb)
     write(
         "embeddings",
         pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),

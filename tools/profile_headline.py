@@ -7,9 +7,10 @@ splits the bench seconds into the driver-side and executor-side halves so an
 optimization targets the one that is actually paying (r10 showed plan
 construction dominates several headline ops at sf0.1).
 
-Also dumps ``.explain("formatted")`` per op into plans/<tag>/<op>_<suffix>.txt.
+With a ``<tag>/<suffix>`` argument (e.g. ``r12/before``) it also dumps
+``.explain("formatted")`` per op into plans/<tag>/<op>_<suffix>.txt.
 
-Usage: python tools/profile_headline.py [sf_dir] [reps] [plan_suffix] [ops...]
+Usage: python tools/profile_headline.py [sf_dir] [reps] [<tag>/<suffix>] [ops...]
 """
 
 from __future__ import annotations
@@ -28,7 +29,9 @@ from australis_indexer_spark.session import get_session
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-    suffix = sys.argv[3] if len(sys.argv) > 3 else None
+    tag, _, suffix = (sys.argv[3] if len(sys.argv) > 3 else "").partition("/")
+    if tag and not suffix:
+        raise SystemExit("plan argument must be <tag>/<suffix>, e.g. r12/before")
     names = tuple(sys.argv[4:]) or HEADLINE
     spark = get_session("profile")
     ops = load_all()
@@ -36,7 +39,7 @@ def main() -> None:
     # warm-up
     ops[names[0]].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r11"
+    plans_dir = Path(__file__).resolve().parent.parent / "plans" / tag
     rows = []
     for name in names:
         tb, te = [], []

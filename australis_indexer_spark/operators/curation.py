@@ -607,7 +607,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # guard n_tokens < 2: sequence(1, 0) is DESCENDING in Spark
             # ([1, 0]), so the unguarded form probes element_at(toks, 2)
             # on a 1-token doc — an ANSI runtime error (found by the
-            # randomized-data fuzz sweep, tools/fuzz_differential.py)
+            # randomized-data fuzz sweep, tools/diffcheck.py --fuzz)
             F.expr(
                 "CASE WHEN n_tokens >= 2 THEN"
                 " transform(sequence(1, n_tokens - 1),"

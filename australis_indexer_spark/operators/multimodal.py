@@ -169,7 +169,7 @@ def _utf8_bytes_cte(src: str) -> str:
     continuation-byte arithmetic. This is what lets byte-level oracles stay
     EXACT on any text; the r3 forms cast VARCHAR→BLOB (DuckDB errors on
     non-ASCII) or equated code points with bytes — both killed by the
-    unicode fuzz profile (tools/fuzz_differential.py, seed unicode:22)."""
+    unicode fuzz profile (tools/diffcheck.py --fuzz unicode:22)."""
     return f"""
 chars AS (
   SELECT doc_id, p AS ci, ord(substr(text, CAST(p AS INTEGER), 1)) AS cp

@@ -339,7 +339,7 @@ def sink_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The r3 form asserted `oned_cannot_prune_price_only` over sampled
     ``repartitionByRange`` boundaries; the randomized fuzz sweep
-    (tools/fuzz_differential.py, default seed 3) showed that claim is
+    (tools/diffcheck.py --fuzz 3) showed that claim is
     distribution-DEPENDENT — custkey skew yields near-empty 1-D files
     whose few prices can dodge the box by luck. A claim an oracle pins
     TRUE must hold for every dataset, so the op now emits only

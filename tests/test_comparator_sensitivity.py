@@ -379,3 +379,28 @@ def test_struct_inner_dtype_drift_fails(spark):
     assert (n_pass, n_fail) == (1, 0)
     n_pass, n_fail = _gate(spark, struct_fn("double"), oracle_float)
     assert (n_pass, n_fail) == (1, 0)
+
+
+def test_unknown_op_names_are_rejected_before_any_op_runs(ops):
+    """A misspelt op name must not select zero ops and report a clean
+    0-pass, 0-fail run; no Spark is needed to see it."""
+    with pytest.raises(ValueError, match="agg_hash_pricing_sumary"):
+        run_ops(None, None, ops, SF, only={"agg_hash_pricing_sumary"})
+
+
+@pytest.mark.parametrize("args", [
+    [SF, "agg_hash_pricing_sumary"],
+    ["--conf", "seril", "--", SF],
+    ["--fuzz", "chaoss:1"],
+    ["BARE"],
+], ids=["unknown-op", "unknown-conf", "unknown-fuzz-profile", "bare-dir"])
+def test_runner_usage_errors_exit_2_before_spark(tmp_path, args):
+    import subprocess
+
+    tool = Path(__file__).resolve().parent.parent / "tools" / "diffcheck.py"
+    args = [str(tmp_path) if a == "BARE" else a for a in args]
+    r = subprocess.run([sys.executable, str(tool), *args],
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 2, r.stdout + r.stderr
+    assert "error:" in r.stderr
+    assert "log4j" not in r.stderr  # the JVM never started

@@ -1,6 +1,6 @@
 """The config/parallelism-invariance class, pinned in CI.
 
-tools/config_invariance.py re-runs the FULL registry strict-exact under
+`tools/diffcheck.py --conf` re-runs the FULL registry strict-exact under
 the perturbed cluster geometries (committed artifact: INVARIANCE_r11.txt).
 The full matrix is ~25 min, so CI pins the ops whose
 implementations genuinely lean on partition arithmetic or Python batch
@@ -27,8 +27,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tests.conftest import SF_ORACLE  # noqa: E402
-from tools.config_invariance import PROFILES, run_profile  # noqa: E402
-from tools.diffcheck import connect_oracle  # noqa: E402
+from tools.diffcheck import PROFILES, connect_oracle, run_profile  # noqa: E402
+
+TOOL = Path(__file__).resolve().parent.parent / "tools" / "diffcheck.py"
 
 # Each op here embeds a partition- or batch-shape assumption that the
 # geometry perturbation directly attacks.
@@ -78,7 +79,7 @@ TZ_SENSITIVE_OPS = [
 def test_tz_sensitive_ops_invariant_under_foreign_session_tz(spark, ops):
     """VERDICT r6 #3: the driver never pins spark.sql.session.timeZone, so
     a non-UTC harness session must not shift any answer. The full-registry
-    sweep lives in tools/config_invariance.py (session_tz profile,
+    sweep is `tools/diffcheck.py --conf session_tz` (artifact
     INVARIANCE_r7); CI pins the ops whose values pass through timestamp
     semantics under the same profile."""
     missing = [k for k in TZ_SENSITIVE_OPS if k not in ops]
@@ -93,29 +94,25 @@ def test_tz_sensitive_ops_invariant_under_foreign_session_tz(spark, ops):
 
 
 def test_cli_rejects_non_dataset_directories(tmp_path):
-    """Positional-arg classification must not adopt an arbitrary local
-    directory as the dataset (ADVICE r5): only a directory with the fixture
-    layout (orders.parquet inside) is a dataset, a profile name always wins
-    over a same-named directory, and anything else exits 2 BEFORE any Spark
-    work starts."""
+    """The runner must not adopt an arbitrary local directory as the
+    dataset (ADVICE r5): only a directory with the fixture layout
+    (orders.parquet inside) is a dataset, and anything else exits 2 BEFORE
+    any Spark work starts."""
     import subprocess
-
-    repo = Path(__file__).resolve().parent.parent
-    tool = repo / "tools" / "config_invariance.py"
 
     # an existing directory WITHOUT the fixture layout is rejected…
     bare = tmp_path / "serial-ish"
     bare.mkdir()
     r = subprocess.run(
-        [sys.executable, str(tool), str(bare)],
+        [sys.executable, str(TOOL), "--conf", "serial", "--", str(bare)],
         capture_output=True, text=True, timeout=60,
     )
     assert r.returncode == 2
     assert "orders.parquet" in r.stderr
 
-    # …and so is a token that is neither profile nor directory
+    # …and so is a token that is neither a profile nor a directory
     r = subprocess.run(
-        [sys.executable, str(tool), "not_a_profile_or_dir"],
+        [sys.executable, str(TOOL), "--conf", "not_a_profile_or_dir"],
         capture_output=True, text=True, timeout=60,
     )
     assert r.returncode == 2
@@ -128,10 +125,8 @@ def test_cli_rejects_unknown_fuzz_profiles():
     from a verification gate."""
     import subprocess
 
-    repo = Path(__file__).resolve().parent.parent
-    tool = repo / "tools" / "config_invariance.py"
     r = subprocess.run(
-        [sys.executable, str(tool), "--fuzz", "chaos:201", "seril"],
+        [sys.executable, str(TOOL), "--fuzz", "chaos:201", "--conf", "seril"],
         capture_output=True,
         text=True,
         timeout=60,
@@ -144,25 +139,23 @@ def test_lanes_get_isolated_warehouse_dirs():
     """Concurrent single-profile lanes must not share a spark-warehouse:
     the r9 invariance sweep's first concurrent pass raced two lanes'
     join_bucketed_colocated saveAsTable on one table's _temporary/0 commit
-    dir (VERDICT r9 'Next round' #3). Each lane now creates its session
-    with a mkdtemp-scoped spark.sql.warehouse.dir, so two fresh processes
+    dir (VERDICT r9 'Next round' #3). The runner's session helper gives
+    each process its own spark.sql.warehouse.dir, so two fresh processes
     must report DIFFERENT warehouse dirs, neither the shared default."""
+    import os
     import subprocess
 
     probe = (
         "import sys; sys.path.insert(0, %r)\n"
-        "from australis_indexer_spark.session import get_session\n"
-        "import os, tempfile\n"
-        "lane = tempfile.mkdtemp(prefix='aispark_inv_lane_')\n"
-        "spark = get_session('lane_probe', cpus=2, extra_conf="
-        "{'spark.sql.warehouse.dir': os.path.join(lane, 'warehouse')})\n"
-        "print(spark.conf.get('spark.sql.warehouse.dir'))\n"
-    ) % str(Path(__file__).resolve().parent.parent)
+        "from tools.diffcheck import session\n"
+        "print(session().conf.get('spark.sql.warehouse.dir'))\n"
+    ) % str(TOOL.parent.parent)
     dirs = []
     for _ in range(2):
         r = subprocess.run(
             [sys.executable, "-c", probe],
             capture_output=True, text=True, timeout=180,
+            env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
         )
         assert r.returncode == 0, r.stderr[-2000:]
         dirs.append(r.stdout.strip().splitlines()[-1])

@@ -1,9 +1,9 @@
 """The randomized-data differential class, pinned in CI.
 
 tools/fuzz_differential.py regenerates the ten engine tables with a fresh
-seed-driven distribution and sweeps the strict Spark-vs-DuckDB diff over
-the full registry (committed artifact: FUZZCHECK_r11.txt). The full sweep
-is ~13 min/seed, so CI pins (a) the generator's data contract and (b) a
+seed-driven distribution, and `tools/diffcheck.py --fuzz` sweeps the strict
+Spark-vs-DuckDB diff over the full registry (committed artifact:
+FUZZCHECK_r11.txt). The full sweep is ~13 min/seed, so CI pins (a) the generator's data contract and (b) a
 fast-op differential slice on one fixed seed — enough that a regression
 in the harness or a freshly introduced distribution coupling in a core op
 family fails `pytest` rather than waiting for the next full sweep.
@@ -278,5 +278,6 @@ def test_fuzz_kill_regressions(spark, ops, tmp_path, profile, seed, names):
     d = str(tmp_path / f"{profile}{seed}")
     gen_dataset(seed, d, profile=profile)
     con = connect_oracle(d)
-    _, n_fail, _, failures = run_ops(spark, con, ops, d, only=names)
+    n_pass, n_fail, _, failures = run_ops(spark, con, ops, d, only=names)
     assert n_fail == 0, f"regressed fuzz kills: {failures}"
+    assert n_pass == len(names)

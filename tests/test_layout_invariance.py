@@ -1,6 +1,6 @@
 """The physical-layout invariance class, pinned in CI.
 
-tools/layout_invariance.py rewrites every table with a seeded random row
+`tools/diffcheck.py --layout` rewrites every table with a seeded random row
 permutation + prime (997-row) row groups and strict-diffs Spark reading
 the SHUFFLED layout against DuckDB reading the ORIGINAL files — proving
 answers are functions of data values, never of physical row order or
@@ -21,8 +21,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tests.conftest import SF_SMOKE  # noqa: E402
-from tools.diffcheck import connect_oracle, run_ops  # noqa: E402
-from tools.layout_invariance import shuffle_layout  # noqa: E402
+from tools.diffcheck import connect_oracle, run_ops, shuffle_layout  # noqa: E402
 
 # Ops whose semantics involve picking/ordering — the first casualties of
 # any hidden dependence on arrival order.

@@ -454,11 +454,28 @@ def test_new_round_is_checked_without_test_edit(ops, tmp_path, monkeypatch, wron
 
 
 def test_driver_sim_runs_named_ops():
-    """tools/driver_sim.py on a vanilla session, two fast ops by name."""
+    """`tools/diffcheck.py --driver` on a vanilla session, two fast ops by name."""
     proc = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "driver_sim.py"), "/root/testdata/sf0.001",
+        [sys.executable, str(REPO / "tools" / "diffcheck.py"), "--driver", "/root/testdata/sf0.001",
          "agg_hash_pricing_summary", "sort_topk_orders"],
         capture_output=True, text=True, timeout=600, check=False,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr[-2000:]
     assert proc.stdout.count("PASS  ") == 2, proc.stdout
+
+
+def test_runner_points_the_path_oracle_at_the_data_it_reads():
+    """profile_parquet_metadata's oracle reads footers by path from
+    $SPARK_GRAFT_ORACLE_SF_DIR; the runner sets it to the dataset Spark
+    reads, so a stale export of another scale factor cannot make that op
+    compare two different datasets."""
+    import os
+
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "diffcheck.py"), "/root/testdata/sf0.001",
+         "profile_parquet_metadata"],
+        capture_output=True, text=True, timeout=600, check=False,
+        env={**os.environ, "SPARK_GRAFT_ORACLE_SF_DIR": "/root/testdata/sf0.01"},
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr[-2000:]
+    assert "PASS  profile_parquet_metadata" in proc.stdout, proc.stdout

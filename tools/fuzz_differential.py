@@ -1,4 +1,4 @@
-"""Randomized-data oracle differential (fuzz) harness.
+"""Randomized-data generator for the oracle differential (the fuzz data axis).
 
 A validation class beyond the fixed driver tables: every oracle-backed op
 must stay value-exact not just on the driver's seed-42 data (and its
@@ -22,25 +22,25 @@ categorical domains identical to the driver's, money values exact cents,
 quantities integral. Everything else — sizes, weights, orderings, group
 cardinalities, tie patterns — is re-drawn per seed.
 
-Usage:
-    python tools/fuzz_differential.py [seed ...] [-- op ...]
-Defaults to seed 1. Writes datasets under /tmp (removed on success),
-prints the same PASS/FAIL lines as tools/diffcheck.py per seed.
+This module only generates the data; the sweep is the oracle runner's
+data axis:
+    python tools/diffcheck.py --fuzz [PROFILE:]SEED ... [-- op ...]
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import sys
-import tempfile
-from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+# every profile gen_dataset knows (its docstring describes each one)
+DATA_PROFILES = (
+    "default", "sparse", "ties", "unicode", "edge", "vecdup", "bignum",
+    "timewarp", "chaos", "dust", "void", "longdoc", "mayhem", "nullstorm",
+    "eclipse", "jsonrot", "husk", "halfpoint",
+)
 
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -276,6 +276,8 @@ def gen_dataset(seed: int, outdir: str, profile: str = "default") -> dict:
     helper that is not half-away-from-zero on the binary value (half-even,
     a rounded ``y + 0.5``, a BigDecimal of the decimal string) parts from
     the oracle's ROUND. The other tables are the default profile's."""
+    if profile not in DATA_PROFILES:
+        raise ValueError(f"unknown data profile {profile!r}")
     rng = np.random.RandomState(seed)
     chaos = profile in ("chaos", "mayhem")
     void = profile == "void"
@@ -687,61 +689,3 @@ def gen_dataset(seed: int, outdir: str, profile: str = "default") -> dict:
             "n_ord": n_ord, "n_li": n_li, "n_ev": n_ev,
             "n_doc": n_doc, "n_vec": n_vec}
 
-
-def main() -> int:
-    argv = sys.argv[1:]
-    only: set[str] = set()
-    if "--" in argv:
-        cut = argv.index("--")
-        only = set(argv[cut + 1:])
-        argv = argv[:cut]
-    # seed tokens: "3" (default profile) or "sparse:3"
-    def parse(tok: str) -> tuple[str, int]:
-        prof, _, s = tok.rpartition(":")
-        return (prof or "default", int(s))
-
-    seeds = [parse(a) for a in argv] or [("default", 1)]
-
-    if len(seeds) > 1:
-        # One subprocess per seed: a few op oracles (profile_parquet_metadata)
-        # bind the dataset dir at module import, so each seed needs a fresh
-        # interpreter; also gives each seed a fresh JVM.
-        import subprocess
-
-        rc = 0
-        for prof, seed in seeds:
-            tok = f"{prof}:{seed}" if prof != "default" else str(seed)
-            r = subprocess.run(
-                [sys.executable, __file__, tok, "--", *sorted(only)]
-                if only else [sys.executable, __file__, tok],
-                check=False,
-            )
-            rc = rc or r.returncode
-        return rc
-
-    total_fail = 0
-    for prof, seed in seeds:
-        outdir = tempfile.mkdtemp(prefix=f"fuzz_sf_{prof}{seed}_")
-        sizes = gen_dataset(seed, outdir, profile=prof)
-        print(f"== seed {prof}:{seed}: {sizes} -> {outdir}")
-        # profile_parquet_metadata's oracle names the dataset dir explicitly
-        os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = outdir
-        # (re)load with the env var in place; registry import is idempotent
-        from australis_indexer_spark.registry import load_all
-        from australis_indexer_spark.session import get_session
-        import tools.diffcheck as dc
-
-        ops = load_all()
-        spark = get_session("fuzz-differential")
-        con = dc.connect_oracle(outdir)
-        _, n_fail, _, failures = dc.run_ops(spark, con, ops, outdir, only=only)
-        total_fail += n_fail
-        if n_fail:
-            print(f"== seed {prof}:{seed}: FAILURES {sorted(failures)} (dataset kept: {outdir})")
-        else:
-            shutil.rmtree(outdir, ignore_errors=True)
-    return 1 if total_fail else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

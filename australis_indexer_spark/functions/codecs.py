@@ -9,10 +9,10 @@ Spark mapping: these are the one genuinely Python-side surface in the engine
 (everything else is JVM built-ins), so they are exposed as **Arrow-batched
 pandas UDFs** — one Python invocation per Arrow batch, not per row. The CBOR
 codec is a self-contained RFC 8949 subset implementation (the `cbor2` wheel
-is not in this container). All three wire codecs execute everywhere: real
-`lz4`/`zstandard` wheels when installed, else pyarrow's bundled lz4/zstd
-libraries (same standard frame formats) with stdlib zlib alongside (at
-rest, parquet zstd covers the reference's storage-compression natively).
+is not in this container). All three wire codecs execute everywhere:
+pyarrow (a hard dependency) bundles the standard LZ4 Frame and Zstd codecs,
+and stdlib zlib sits alongside (at rest, parquet zstd covers the reference's
+storage-compression natively).
 """
 
 from __future__ import annotations
@@ -28,14 +28,7 @@ from pyspark.sql.types import BinaryType, StringType
 
 import pyarrow as _pa
 
-try:  # optional wire-parity codecs (real wheels win when present)
-    import lz4.frame as _lz4  # type: ignore
-except ImportError:
-    _lz4 = None
-try:
-    import zstandard as _zstd  # type: ignore
-except ImportError:
-    _zstd = None
+from .lz4frame import lz4f_decompress
 
 # ---------------------------------------------------------------------------
 # Minimal CBOR (RFC 8949) — the subset the envelope/message model needs:
@@ -235,43 +228,26 @@ def _zstd_frame_content_size(blob: bytes) -> int:
         raise ValueError(f"zstd: truncated frame header ({e})") from e
 
 
+# LZ4F: pyarrow's bundled lz4 library encodes real LZ4 frames (compressed
+# blocks, real match sequences); the self-contained full-spec frame DECODER
+# (lz4frame.py) reads them back — pyarrow's own decompress demands the
+# content size up front, which LZ4F frames don't always carry, while our
+# decoder parses any compliant frame. Every roundtrip therefore
+# cross-verifies the spec decoder against a real encoder.
+# ZSTD: pyarrow bundles libzstd (standard frames, magic 0xFD2FB528 — the
+# reference's exact wire format, borealis-indexer/src/main.rs:370).
+# Decompression reads the frame's pledged content size from the header
+# (helper above), the piece pyarrow's Codec API leaves to the caller.
 CODECS: dict[str, tuple[Any, Any]] = {
     "ZLIB": (zlib.compress, zlib.decompress),
-}
-if _lz4 is not None:
-    CODECS["LZ4F"] = (_lz4.compress, _lz4.decompress)
-else:
-    # Real LZ4 Frame encoder from pyarrow's bundled lz4 library (compressed
-    # blocks, real match sequences) paired with the self-contained
-    # full-spec frame DECODER (lz4frame.py) — pyarrow's own decompress
-    # demands the content size up front, which LZ4F frames don't always
-    # carry, while our decoder parses any compliant frame. Every roundtrip
-    # therefore cross-verifies the spec decoder against a real encoder.
-    from .lz4frame import lz4f_decompress
-
-    CODECS["LZ4F"] = (
-        lambda b: _pa.Codec("lz4").compress(b, asbytes=True),
-        lz4f_decompress,
-    )
-if _zstd is not None:
-    CODECS["ZSTD"] = (
-        lambda b: _zstd.ZstdCompressor().compress(b),
-        lambda b: _zstd.ZstdDecompressor().decompress(b),
-    )
-else:
-    # Real Zstd wire branch without the `zstandard` wheel: pyarrow bundles
-    # libzstd (standard frames, magic 0xFD2FB528 — the reference's exact
-    # wire format, borealis-indexer/src/main.rs:370). Decompression reads
-    # the frame's pledged content size from the header (helper above), the
-    # piece pyarrow's Codec API leaves to the caller. This retires the r3
-    # env-bound waiver: the ZSTD branch now EXECUTES in this container
-    # (VERDICT r3 "What's missing" #3).
-    CODECS["ZSTD"] = (
+    "LZ4F": (lambda b: _pa.Codec("lz4").compress(b, asbytes=True), lz4f_decompress),
+    "ZSTD": (
         lambda b: _pa.Codec("zstd").compress(b, asbytes=True),
         lambda b: _pa.Codec("zstd").decompress(
             b, _zstd_frame_content_size(bytes(b)), asbytes=True
         ),
-    )
+    ),
+}
 
 
 def compress(data: bytes, codec: str | None) -> bytes:

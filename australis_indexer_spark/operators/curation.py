@@ -24,12 +24,13 @@ counts (single IEEE op — bit-identical on both engines).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..scratch import scratch_dir
 from ..registry import op
 from ..sources.batch import load_table as lt
+from .scale import range_prefix_sum
 
 NGRAM = 8          # decontamination n-gram length
 CHUNK_TOKENS = 64  # training chunk window
@@ -395,13 +396,12 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact at sf0.001/sf0.01/sf0.1."""
     norm = _canonical_text()
     base = lt(spark, sf_dir, "documents").select("doc_id", norm.alias("t"))
-    base.createOrReplaceTempView("_pcb_base")
     par = spark.sparkContext.defaultParallelism
     return spark.sql(
         f"""
         WITH docs AS (
           SELECT /*+ REPARTITION({par}, doc_id) */ doc_id, t
-          FROM _pcb_base WHERE doc_id % 10 != 0
+          FROM {{base}} WHERE doc_id % 10 != 0
         ),
         docs_tok AS (
           SELECT doc_id, split(t, ' ') AS toks, size(split(t, ' ')) AS n
@@ -409,7 +409,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eval_docs AS (
           SELECT doc_id, split(t, ' ') AS toks, size(split(t, ' ')) AS n
-          FROM _pcb_base WHERE doc_id % 10 = 0
+          FROM {{base}} WHERE doc_id % 10 = 0
         ),
         eval_g8 AS (
           SELECT DISTINCT {_gram_sql(NGRAM)} AS gram
@@ -448,7 +448,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         kept AS (
           SELECT b.doc_id, b.t
-          FROM _pcb_base b LEFT JOIN stats s ON b.doc_id = s.doc_id
+          FROM {{base}} b LEFT JOIN stats s ON b.doc_id = s.doc_id
           WHERE b.doc_id % 10 != 0
             AND coalesce(s.keep, true) AND NOT coalesce(s.contaminated, false)
         ),
@@ -472,7 +472,8 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(LEAST(n - s, {CHUNK_TOKENS}) AS INT) AS n_tokens,
                array_join(slice(toks, s + 1, {CHUNK_TOKENS}), ' ') AS chunk_text
         FROM starts
-        """
+        """,
+        base=base,
     )
 
 
@@ -682,11 +683,9 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     concat-then-split packing). The global offset is NOT a global-sort
     window: range-partition on the order key (partition order extends
     global order), per-partition running sums, then the exclusive prefix
-    of the ~NPART partition totals is broadcast back — the same two-phase
-    prefix-sum shape as pipeline_corpus_curation's token budget
-    (dedup.py:526), with one row per partition on the driver."""
-    from pyspark.sql import Window as PW
-
+    of the ~NPART partition totals is broadcast back — the two-phase
+    prefix sum (scale.range_prefix_sum) that pipeline_corpus_curation's
+    token budget also runs, with one row per partition on the driver."""
     chunks = _tok(lt(spark, sf_dir, "documents")).filter(F.col("n") >= 1)
     chunks = chunks.select(
         "doc_id",
@@ -705,36 +704,13 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = chunks.withColumn(
         "seq_key", F.col("doc_id") * 1024 + F.col("chunk_idx")
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    parts = keyed.repartitionByRange(n_parts, "seq_key").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    local_w = (
-        PW.partitionBy("pid")
-        .orderBy("seq_key")
-        .rowsBetween(PW.unboundedPreceding, PW.currentRow)
-    )
-    local = parts.withColumn(
-        "local_cum", F.sum("n_tokens").over(local_w)
-    ).localCheckpoint(eager=True)
-    totals = sorted(
-        (r["pid"], r["total"])
-        for r in local.groupBy("pid").agg(F.sum("n_tokens").alias("total")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, total in totals:
-        offsets.append((pid, acc))
-        acc += total
-    off_df = spark.createDataFrame(offsets, "pid int, offset long")
+    packed, cum, _ = range_prefix_sum(spark, keyed, ("seq_key",), "n_tokens")
     return (
-        local.join(F.broadcast(off_df), "pid")
-        .select(
+        packed.select(
             "doc_id",
             "chunk_idx",
             "n_tokens",
-            (F.col("local_cum") + F.col("offset") - F.col("n_tokens")).alias(
-                "start_off"
-            ),
+            (cum - F.col("n_tokens")).alias("start_off"),
         )
         .withColumn("pack_id", F.expr(f"start_off div {PACK_CAP}"))
     )

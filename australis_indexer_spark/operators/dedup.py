@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..registry import op
 from ..sources.batch import load_table as lt
+from .scale import range_prefix_sum
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -118,7 +119,7 @@ SLICES_PER_MD5 = N_HASH // N_MD5  # 4 slices × 8 hex chars = one 128-bit md5
 
 
 def _minhash_sig_sql() -> str:
-    """Spark-SQL minhash aggregation over a ``_mh_shingles`` view.
+    """Spark-SQL minhash aggregation over the ``{shingles}`` argument.
 
     16 portable min-hashes per doc at the cost of FOUR md5 calls per
     shingle: each 128-bit md5(i || ':' || shingle) is sliced into four
@@ -137,7 +138,7 @@ def _minhash_sig_sql() -> str:
         for i in range(N_MD5)
         for k in range(SLICES_PER_MD5)
     )
-    return f"SELECT doc_id, {mins} FROM _mh_shingles GROUP BY doc_id"
+    return f"SELECT doc_id, {mins} FROM {{shingles}} GROUP BY doc_id"
 
 
 def _sql_minhash_sig() -> str:
@@ -203,13 +204,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH trick that keeps 100 TB dedup shuffle-bound instead of O(n²).
 
     Construction: the shingle scan is a DataFrame (shared with the other
-    dedup ops), registered as a temp view; everything after it is ONE
-    spark.sql parse. The chained selectExpr/join form cost ~500 py4j
+    dedup ops), handed to spark.sql as an argument; everything after it is
+    ONE spark.sql parse. The chained selectExpr/join form cost ~500 py4j
     round-trips per build (~0.5 s of driver time, measured by cProfile at
     sf0.1 — construction was 45% of the op's bench seconds); the single
-    parse resolves to the identical tree. The cached signature is built
-    during execution (clearCache precedes every bench pass), and the temp
-    view resolves at sql() time so concurrent re-registration is safe.
+    parse resolves to the identical tree. Frame arguments get a unique
+    view name that is dropped once the text is analyzed, so the op leaves
+    nothing in the session catalog and concurrent calls cannot swap each
+    other's inputs.
 
     r10 session 3: the 16 min-hashes ride the band explode, so the
     banded self-join emits est_jaccard directly and the `>= 0.5` gate
@@ -224,15 +226,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature IS the needed metadata; byte model corrected per ADVICE
     r10 #2). Interleaved A/B at sf0.1: min3avg 0.80 → 0.73 s,
     rows identical (256 pairs), oracle exact at sf0.001/sf0.01."""
-    _shingles(spark, sf_dir, distinct=False).createOrReplaceTempView("_mh_shingles")
-    # eager localCheckpoint, not cache(): both sides of the band self-join
-    # read the materialized signature blocks (one small row per doc), and
-    # the blocks die with the returned frame — the r10 cache() lingered in
-    # the CacheManager after the caller's action finished (VERDICT r10
-    # What's-wrong #2). Interleaved A/B at sf0.1: flat-or-better (the two
-    # plan-subtree instances no longer race to fill the cache).
-    sig = spark.sql(_minhash_sig_sql()).localCheckpoint(eager=True)
-    sig.createOrReplaceTempView("_mh_sig")
+    # both sides of the band self-join read the signature (one small row
+    # per doc), and the returned frame reads it: an eager localCheckpoint
+    # (the second rule in registry.op's docstring)
+    sig = spark.sql(
+        _minhash_sig_sql(), shingles=_shingles(spark, sf_dir, distinct=False)
+    ).localCheckpoint(eager=True)
     # long-form (doc, h0..h15, band_idx, band_key): ONE self-equi-join on
     # (band, key) replaces four joins + union — a single shuffle exchange
     # reused for both sides; est_jaccard is the same tree as the Column
@@ -247,13 +246,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH bands AS (
           SELECT doc_id, {h_cols}, b.band AS band, b.bk AS bk
-          FROM (SELECT *, explode({_bands_struct_sql()}) AS b FROM _mh_sig)
+          FROM (SELECT *, explode({_bands_struct_sql()}) AS b FROM {{sig}})
         )
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
                {est_sql} AS est_jaccard
         FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk
         WHERE a.doc_id < b.doc_id AND {est_sql} >= 0.5
-        """
+        """,
+        sig=sig,
     )
 
 
@@ -282,12 +282,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     inclusion-exclusion. This is the verification stage LSH candidates feed
     at scale; standalone it is safe while shingle document-frequency is
     bounded (salt or drop ultra-common shingles when it is not)."""
-    # eager localCheckpoint, not cache(): the distinct shingle table feeds
-    # three subtrees (sizes + both join sides); materializing it once frees
-    # the blocks with the returned frame instead of leaving a CacheManager
-    # entry (VERDICT r10 What's-wrong #2). Footprint is the same as the
-    # cache was (shingle-table-sized — at 100 TB this op runs on LSH
-    # candidates, not standalone; see docstring).
+    # the distinct shingle table feeds three subtrees of the returned frame
+    # (sizes + both join sides): an eager localCheckpoint (registry.op's
+    # second rule). Shingle-table-sized — at 100 TB this op runs on LSH
+    # candidates, not standalone; see docstring.
     sh = _shingles(spark, sf_dir).localCheckpoint(eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -425,13 +423,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate; hamming is pair-determined so distinct-then-filter is
     # unchanged. Emitted schema identical (doc_a, doc_b, hamming BIGINT).
     #
-    # Eager localCheckpoint, not cache(): the 32-bit-vote aggregate runs
-    # ONCE at build (recomputing it per join side is ~9x the op at sf0.1 —
-    # AQE's broadcast of one side defeats ReusedExchange), both sides read
-    # the (doc_id, long) blocks — narrower than the r10 cached string form
-    # — and the blocks die with the returned frame instead of lingering in
-    # the CacheManager (VERDICT r10 What's-wrong #2). A within-invocation
-    # intermediate: every call recomputes from the scan.
+    # Eager localCheckpoint (registry.op's second rule: both join sides of
+    # the returned frame read it): the 32-bit-vote aggregate runs ONCE at
+    # build (recomputing it per join side is ~9x the op at sf0.1 — AQE's
+    # broadcast of one side defeats ReusedExchange), and both sides read
+    # the narrow (doc_id, long) blocks. Every call recomputes from the scan.
     fp = (
         dedup_simhash(spark, sf_dir)
         .select("doc_id", F.conv("simhash32", 2, 10).cast("long").alias("fpl"))
@@ -569,9 +565,9 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plan — filters/pruning flow through, nothing materializes
     between stages. At 100 TB: stage 1 is map-only, stages 2-3 are the
     LSH equi-join machinery, and stage 4 is a two-phase distributed prefix
-    sum — range-partition by doc_id (partition order == global order),
-    per-partition running sums, then an exclusive prefix of the ~NPART
-    partition totals joined back broadcast. No single-partition global
+    sum (scale.range_prefix_sum) — range-partition by doc_id (partition
+    order == global order), per-partition running sums, then an exclusive
+    prefix of the ~NPART partition totals joined back broadcast. No single-partition global
     window anywhere; the only driver-side data is one row per partition."""
     docs = lt(spark, sf_dir, "documents")
     toks = F.split("text", " ")
@@ -592,55 +588,10 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = quality.select("doc_id", "n_tokens").join(
         near_kept.select("doc_id"), "doc_id"
     )
-    return _budget_prefix_sum(spark, survivors, TOKEN_BUDGET)
-
-
-def _budget_prefix_sum(
-    spark: SparkSession, survivors: DataFrame, budget: int
-) -> DataFrame:
-    """Global running sum of n_tokens in doc_id order WITHOUT a global
-    single-partition window: range-partition on doc_id (range buckets are
-    assigned to ascending partition ids, so partition order extends the
-    global order), window within each partition only, then shift each
-    partition by the exclusive prefix of partition totals (one tiny collect
-    — one row per partition — broadcast back). The standard scalable
-    prefix-sum shape: at 100 TB each phase is embarrassingly parallel."""
-    from pyspark.sql import Window as W
-
-    n_parts = spark.sparkContext.defaultParallelism
-    parts = survivors.repartitionByRange(n_parts, "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    local_w = (
-        W.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    # eager localCheckpoint, not cache(): materialized once for the totals
-    # collect AND the returned join, and the blocks die with the returned
-    # frame — a cache() lingered in the CacheManager past the op's life
-    # (VERDICT r10 What's-wrong #2; same shape as scale.py's prefix sum)
-    local = parts.withColumn(
-        "local_cum", F.sum("n_tokens").over(local_w)
-    ).localCheckpoint(eager=True)
-    totals = sorted(
-        (r["pid"], r["total"])
-        for r in local.groupBy("pid").agg(F.sum("n_tokens").alias("total")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, total in totals:
-        offsets.append((pid, acc))
-        acc += total
-    off_df = spark.createDataFrame(offsets, "pid int, offset long")
-    return (
-        local.join(F.broadcast(off_df), "pid")
-        .select(
-            "doc_id",
-            "n_tokens",
-            (F.col("local_cum") + F.col("offset")).alias("cum_tokens"),
-        )
-        .filter(F.col("cum_tokens") <= budget)
-    )
+    budgeted, cum, _ = range_prefix_sum(spark, survivors, ("doc_id",), "n_tokens")
+    return budgeted.select(
+        "doc_id", "n_tokens", cum.alias("cum_tokens")
+    ).filter(F.col("cum_tokens") <= TOKEN_BUDGET)
 
 
 # ---------------------------------------------------------------------------

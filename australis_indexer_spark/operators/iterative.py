@@ -236,66 +236,19 @@ def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the gate exactly; the fixed-centroid twin `sim_ann_ivf`
     carries the full value-level oracle for the serving join itself, and
     `ivf_trained_serve` exposes the raw neighbor lists."""
-    from .similarity import TOP_K, sim_topk_bruteforce
+    from .similarity import recall_tuned
 
-    brute = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    brute.cache()
     # Centroids are nprobe-independent: train ONCE and reuse across gate
     # retries instead of re-running the Lloyd loop per doubling (the
     # pq.py codebook precedent, ADVICE r4 #3).
     centroids, _ = train(spark, sf_dir)
-
-    def gate(nprobe: int) -> DataFrame:
-        approx = ivf_trained_serve(
+    return recall_tuned(
+        spark,
+        sf_dir,
+        lambda nprobe: ivf_trained_serve(
             spark, sf_dir, nprobe=nprobe, centroids=centroids
-        ).select("query_id", "neighbor_id")
-        b, a = brute.alias("b"), approx.alias("a")
-        per = (
-            b.join(
-                a,
-                (F.col("b.query_id") == F.col("a.query_id"))
-                & (F.col("b.neighbor_id") == F.col("a.neighbor_id")),
-                "left",
-            )
-            .groupBy(F.col("b.query_id").alias("query_id"))
-            .agg(F.count(F.col("a.neighbor_id")).alias("n_hits"))
-        )
-        return (
-            per.agg(F.count("*").alias("n_queries"), F.sum("n_hits").alias("_hits"))
-            .select(
-                "n_queries",
-                F.lit(TOP_K).alias("k"),
-                # n_queries = 0 (every candidate query embedding zero-norm)
-                # makes _hits NULL; the SLO is vacuously met then — pin TRUE
-                # to match the oracle's literal TRUE (ADVICE r4 #2).
-                F.when(F.col("n_queries") == 0, F.lit(True))
-                .otherwise(
-                    (F.col("_hits") / (F.col("n_queries") * F.lit(float(TOP_K))))
-                    >= F.lit(0.80)
-                )
-                .alias("recall_ge_080"),
-            )
-        )
-
-    nprobe = 2
-    try:
-        while True:
-            # checkpoint the 1-row summary BEFORE any return so the caller's
-            # action reads it instead of re-executing the whole brute+serve
-            # pipeline (the pq.py shortlist-gate fix, r10 session 3). The
-            # exhausted path (nprobe >= K_TRAIN) previously returned the raw
-            # frame — after the finally-unpersist the caller's action then
-            # re-ran brute+train+serve uncached, the exact 2× this removes
-            # (ADVICE r10 #1). A within-invocation intermediate: every call
-            # recomputes.
-            out = gate(nprobe).localCheckpoint(eager=True)
-            if nprobe >= K_TRAIN:  # all cells probed == exact search
-                return out
-            row = out.collect()[0]  # 1-row quality summary
-            if row["recall_ge_080"]:
-                return out
-            nprobe *= 2
-    finally:
-        # Drop the cached truth set once tuning settles (ADVICE r4 #3);
-        # every return is checkpointed, so nothing references it.
-        brute.unpersist()
+        ),
+        2,
+        K_TRAIN,  # all cells probed == exact search
+        0.80,
+    )

@@ -756,12 +756,12 @@ def udf_python_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = "aispark_split_chunks"
     spark.udtf.register(name, SplitChunks)
-    lt(spark, sf_dir, "documents").createOrReplaceTempView("aispark_udtf_docs")
     return spark.sql(
         f"""
         SELECT d.doc_id, c.chunk_idx, c.chunk_len, c.chunk_md5
-        FROM aispark_udtf_docs d, LATERAL {name}(d.text) c
-        """
+        FROM {{docs}} d, LATERAL {name}(d.text) c
+        """,
+        docs=lt(spark, sf_dir, "documents"),
     )
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.det import cents
 from ..registry import op
 from ..sources.batch import load_table as lt
-from .similarity import N_QUERIES, TOP_K
+from .similarity import N_QUERIES, TOP_K, recall_tuned
 
 DIM = 64
 M_SUB = 8                  # subspaces
@@ -345,70 +345,21 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution (the sim_ann_ivf_trained precedent; a FIXED shortlist is
     the husk:164 class of calibration luck). The oracle asserts the gate
     exactly; `pq_serve` exposes raw neighbor lists for the tests."""
-    from .similarity import sim_topk_bruteforce
-
-    brute = sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    brute.cache()
-    n_corpus = _normed(spark, sf_dir).count()
     # Codebooks are shortlist-independent: train ONCE and reuse across gate
     # retries instead of re-running Lloyd per doubling (ADVICE r4 #3).
     codebooks = train_codebooks(spark, sf_dir)
-
-    def gate(shortlist: int) -> DataFrame:
-        approx = pq_serve(
+    return recall_tuned(
+        spark,
+        sf_dir,
+        lambda shortlist: pq_serve(
             spark, sf_dir, shortlist=shortlist, codebooks=codebooks
-        ).select("query_id", "neighbor_id")
-        b, a = brute.alias("b"), approx.alias("a")
-        per = (
-            b.join(
-                a,
-                (F.col("b.query_id") == F.col("a.query_id"))
-                & (F.col("b.neighbor_id") == F.col("a.neighbor_id")),
-                "left",
-            )
-            .groupBy(F.col("b.query_id").alias("query_id"))
-            .agg(F.count(F.col("a.neighbor_id")).alias("n_hits"))
-        )
-        return per.agg(
-            F.count("*").alias("n_queries"), F.sum("n_hits").alias("_hits")
-        ).select(
-            "n_queries",
-            F.lit(TOP_K).alias("k"),
-            F.lit(M_SUB).alias("code_bytes_per_vector"),
-            F.lit(DIM * 4 // M_SUB).alias("compression_x"),
-            # n_queries = 0 → _hits NULL; SLO vacuously met — pin TRUE to
-            # match the oracle's literal TRUE (ADVICE r4 #2).
-            F.when(F.col("n_queries") == 0, F.lit(True))
-            .otherwise(
-                (F.col("_hits") / (F.col("n_queries") * F.lit(float(TOP_K))))
-                >= F.lit(RECALL_GATE)
-            )
-            .alias(f"recall_ge_{int(RECALL_GATE * 100):03d}"),
-        )
-
-    shortlist = SHORTLIST
-    try:
-        while True:
-            # materialize the 1-row summary ONCE and hand the caller the
-            # checkpointed frame: the tuning collect() previously executed
-            # the whole brute+ADC pipeline, and the caller's action then
-            # re-executed it from scratch — a full 2× of the op (r10
-            # session 3; measured 6.9 → 3.4 s min at sf0.01). Checkpoint
-            # BEFORE the exhausted-path return too — that path previously
-            # returned the raw frame, so after the finally-unpersist the
-            # caller's action re-ran everything uncached (ADVICE r10 #1).
-            # A within-invocation intermediate: every call recomputes.
-            out = gate(shortlist).localCheckpoint(eager=True)
-            if shortlist >= n_corpus:  # full-corpus re-rank == exact search
-                return out
-            row = out.collect()[0]  # 1-row quality summary
-            if row[f"recall_ge_{int(RECALL_GATE * 100):03d}"]:
-                return out
-            shortlist *= 2
-    finally:
-        # Drop the cached truth set once tuning settles (ADVICE r4 #3);
-        # every return is checkpointed, so nothing references it.
-        brute.unpersist()
+        ),
+        SHORTLIST,
+        _normed(spark, sf_dir).count(),  # full-corpus re-rank == exact search
+        RECALL_GATE,
+        F.lit(M_SUB).alias("code_bytes_per_vector"),
+        F.lit(DIM * 4 // M_SUB).alias("compression_x"),
+    )
 
 
 _GRAM_SCALE = 10_000  # fixed-point quantum for exact cross-engine sums

@@ -9,7 +9,7 @@ semantics-preserving, not just "probably fine".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.det import cents, dsum, sql_dsum
@@ -93,11 +93,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = lt(spark, sf_dir, "customer")
     n = lt(spark, sf_dir, "nation")
     r = lt(spark, sf_dir, "region")
-    c.join(n, c.c_nationkey == n.n_nationkey).join(
+    src = c.join(n, c.c_nationkey == n.n_nationkey).join(
         r, n.n_regionkey == r.r_regionkey
-    ).createOrReplaceTempView("_gs_src")
+    )
     return spark.sql(
-        f"""
+        """
         SELECT n_name AS nation, r_name AS region,
                COUNT(*) AS n_customers,
                -- floor-form cents (det.cents proof) — Spark-side text only;
@@ -106,9 +106,10 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                         THEN FLOOR(c_acctbal * 100.0 + 0.5D)
                         ELSE -FLOOR(0.5D - c_acctbal * 100.0) END)
                  / CAST(100.0 AS DOUBLE) AS total_acctbal
-        FROM _gs_src
+        FROM {src}
         GROUP BY GROUPING SETS ((n_name, r_name), (r_name), ())
-        """
+        """,
+        src=src,
     )
 
 
@@ -156,14 +157,12 @@ def window_ntile_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scale-safe distribution-window plan: NO single-partition sort.
-    Two-phase distributed rank (the same shape as the token-budget prefix
-    sum, dedup.py): range-partition on the sort key — range buckets land on
-    ascending partition ids, so partition order extends the global order —
-    row_number within each partition, then shift by the exclusive prefix of
-    per-partition counts (one collect of one row per partition, broadcast
-    back). ntile/percent_rank/cume_dist are then closed-form in the global
-    rank r and total t (the ORDER BY key is unique, so every row is its own
-    peer group):
+    Two-phase distributed rank: `range_prefix_sum` (below, shared with the
+    token-budget and sequence-packing prefix sums) numbers the rows in sort
+    order with row_number within each range partition plus the exclusive
+    prefix of per-partition counts. ntile/percent_rank/cume_dist are then
+    closed-form in the global rank r and total t (the ORDER BY key is
+    unique, so every row is its own peer group):
       percent_rank = (r-1)/(t-1),  cume_dist = r/t,
       ntile(n): first t%n buckets get ceil(t/n) rows, the rest floor(t/n).
     At 100 TB each phase is embarrassingly parallel; the only global state
@@ -171,31 +170,52 @@ def window_ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ntile_distributed(spark, sf_dir)
 
 
-def _ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = lt(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    n_parts = spark.sparkContext.defaultParallelism
-    parts = orders.repartitionByRange(
-        n_parts, "o_totalprice", "o_orderkey"
+def range_prefix_sum(
+    spark: SparkSession, df: DataFrame, keys: tuple[str, ...], value: str | None = None
+) -> tuple[DataFrame, Column, int]:
+    """Global running total in ``keys`` order (a unique key) with NO
+    single-partition window: range-partition on the keys — range buckets
+    land on ascending partition ids, so partition order extends the global
+    order — run the window within each partition only, then shift each
+    partition by the exclusive prefix of the partition totals (one collect
+    of one row per partition, broadcast back). At 100 TB each phase is
+    embarrassingly parallel; the only global state is one total per
+    partition.
+
+    Returns ``(frame, cum, total)``: ``cum`` is the inclusive running sum of
+    ``value`` over ``frame`` — the global row number when ``value`` is None
+    — and ``total`` the grand total. The per-partition pass is read by the
+    totals collect and by the returned frame, so it is an eager
+    localCheckpoint (the second rule in ``registry.op``'s docstring)."""
+    parts = df.repartitionByRange(
+        spark.sparkContext.defaultParallelism, *keys
     ).withColumn("pid", F.spark_partition_id())
-    local_w = W.partitionBy("pid").orderBy("o_totalprice", "o_orderkey")
-    # localCheckpoint, not cache: eager, lineage-truncated, and GC-able once
-    # the returned plan is consumed — a cache here would pin the projection
-    # in executor storage for the whole session (it must outlive this op)
-    local = parts.withColumn("lr", F.row_number().over(local_w)).localCheckpoint(
-        eager=True
-    )
-    counts = sorted(
-        (r["pid"], r["c"])
-        for r in local.groupBy("pid").agg(F.count("*").alias("c")).collect()
+    w = W.partitionBy("pid").orderBy(*keys)
+    if value is None:
+        run, agg = F.row_number(), F.count("*")
+    else:
+        run, agg = F.sum(value), F.sum(value)
+        w = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    local = parts.withColumn("local_cum", run.over(w)).localCheckpoint(eager=True)
+    totals = sorted(
+        (r["pid"], r["total"])
+        for r in local.groupBy("pid").agg(agg.alias("total")).collect()
     )
     offsets, acc = [], 0
-    for pid, c in counts:
+    for pid, total in totals:
         offsets.append((pid, acc))
-        acc += c
-    t = acc  # global row count
-    off_df = spark.createDataFrame(offsets, "pid int, off long")
+        acc += total
+    off_df = spark.createDataFrame(offsets, "pid int, offset long")
+    return (
+        local.join(F.broadcast(off_df), "pid"),
+        F.col("local_cum") + F.col("offset"),
+        acc,
+    )
 
-    r = F.col("off") + F.col("lr")
+
+def _ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = lt(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    ranked, r, t = range_prefix_sum(spark, orders, ("o_totalprice", "o_orderkey"))
     n = 10
     q, rem = t // n, t % n
     threshold = rem * (q + 1)  # rows covered by the (q+1)-sized buckets
@@ -208,8 +228,7 @@ def _ntile_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r - 1) / F.lit(t - 1) if t > 1 else F.lit(0.0)
     )
     return (
-        local.join(F.broadcast(off_df), "pid")
-        .select(
+        ranked.select(
             "o_orderkey",
             "o_totalprice",
             decile.alias("decile"),
@@ -349,11 +368,9 @@ def agg_hll_sketch_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("hll_sketch_agg(user_id)").alias("sk"),
         F.countDistinct("user_id").alias("exact_users"),
     )
-    # eager localCheckpoint, not cache(): the op cannot unpersist after its
-    # caller's action, so a cache() here lingered in the CacheManager until
-    # someone called clearCache() — over a full registry walk those pile
-    # into executor storage (VERDICT r10 What's-wrong #2). The checkpointed
-    # blocks (one row per event_type) die with the returned frame instead.
+    # both branches of the returned frame read the per-type sketches (one
+    # row per event_type): an eager localCheckpoint (registry.op's second
+    # rule)
     per_type = per_type.localCheckpoint(eager=True)
     within = lambda est, exact: F.abs(est - exact) <= 0.05 * exact  # noqa: E731
     total_exact = ev.agg(F.countDistinct("user_id").alias("exact_users"))

@@ -28,6 +28,8 @@ carry a unique tie-break key so the selected SET is deterministic.
 
 from __future__ import annotations
 
+import string
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -732,31 +734,43 @@ def join_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Correlated-subquery shapes (Q4 / Q21 / Q22) ---------------------------
-# These three run the IDENTICAL ANSI text on both engines: Spark executes
-# the same string via temp views that the DuckDB oracle executes directly.
-# What is under test is Catalyst's subquery decorrelation — EXISTS and
-# NOT EXISTS rewritten to semi/anti joins with mixed equi + non-equi
-# correlated predicates, never a per-row subquery loop.
+# These three run ONE ANSI template on both engines: each `{table}` field is
+# a table. Spark gets the loaded frames as `spark.sql` arguments (PySpark
+# names each one `_pyspark_<uuid>` and drops that view once the text is
+# analyzed, so no name is left in the session catalog); the DuckDB oracle is
+# the same template with the plain table names filled in. What is under test
+# is Catalyst's subquery decorrelation — EXISTS and NOT EXISTS rewritten to
+# semi/anti joins with mixed equi + non-equi correlated predicates, never a
+# per-row subquery loop.
 
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        lt(spark, sf_dir, n).createOrReplaceTempView(n)
+def _tables(template: str) -> list[str]:
+    return sorted({f for _, f, _, _ in string.Formatter().parse(template) if f})
+
+
+def _plain(template: str) -> str:
+    """The template as DuckDB text: every field filled with its table name."""
+    return template.format(**{t: t for t in _tables(template)})
+
+
+def _on_tables(spark: SparkSession, sf_dir: str, template: str) -> DataFrame:
+    """The template as a Spark plan over the tables loaded from ``sf_dir``."""
+    return spark.sql(template, **{t: lt(spark, sf_dir, t) for t in _tables(template)})
 
 
 _Q4_SQL = """
 SELECT o_orderpriority, COUNT(*) AS n_orders
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
   AND o_orderdate <  TIMESTAMP '1996-01-01 00:00:00'
   AND EXISTS (
-    SELECT 1 FROM lineitem
+    SELECT 1 FROM {lineitem}
     WHERE l_orderkey = o_orderkey
       AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
 GROUP BY o_orderpriority
 """
 
 
-@op("query_exists_late_orders", tags=("relational", "analytics", "subquery"), oracle=_Q4_SQL)
+@op("query_exists_late_orders", tags=("relational", "analytics", "subquery"), oracle=_plain(_Q4_SQL))
 def query_exists_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (order-priority checking, late := shipped >60 days
     after order date since this schema has no commit/receipt dates): count
@@ -764,23 +778,22 @@ def query_exists_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries an equality on the order key plus a NON-equi correlated date
     predicate; Catalyst decorrelates it into ONE left-semi hash join on
     l_orderkey with the date comparison as a residual condition — the
-    lineitem side is touched once, never per outer row. The oracle is this
-    exact same text."""
-    _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_Q4_SQL)
+    lineitem side is touched once, never per outer row. The oracle is the
+    same template."""
+    return _on_tables(spark, sf_dir, _Q4_SQL)
 
 
 _Q21_SQL = """
 SELECT s_name, COUNT(*) AS numwait
-FROM supplier
-JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-JOIN orders ON o_orderkey = l1.l_orderkey
+FROM {supplier}
+JOIN {lineitem} l1 ON s_suppkey = l1.l_suppkey
+JOIN {orders} ON o_orderkey = l1.l_orderkey
 WHERE o_orderstatus = 'F'
   AND EXISTS (
-    SELECT 1 FROM lineitem l2
+    SELECT 1 FROM {lineitem} l2
     WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
   AND NOT EXISTS (
-    SELECT 1 FROM lineitem l3
+    SELECT 1 FROM {lineitem} l3
     WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
       AND l3.l_shipdate > l1.l_shipdate)
 GROUP BY s_name
@@ -789,7 +802,7 @@ LIMIT 10
 """
 
 
-@op("query_waiting_suppliers", tags=("relational", "analytics", "subquery"), oracle=_Q21_SQL)
+@op("query_waiting_suppliers", tags=("relational", "analytics", "subquery"), oracle=_plain(_Q21_SQL))
 def query_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept waiting orders: last shipper on
     multi-supplier finished orders — receipt/commit dates reframed onto
@@ -798,31 +811,30 @@ def query_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH keyed on l_orderkey — so all three lineitem touches ride the same
     hash partitioning and AQE coalesces them, with the <> and date residuals
     evaluated inside the joins; the top-10 is TakeOrderedAndProject. The
-    oracle is this exact same text."""
-    _views(spark, sf_dir, "supplier", "lineitem", "orders")
-    return spark.sql(_Q21_SQL)
+    oracle is the same template."""
+    return _on_tables(spark, sf_dir, _Q21_SQL)
 
 
 _Q22_SQL = """
 WITH avg_bal AS (
   SELECT CAST(SUM(CAST(ROUND(c_acctbal * 100.0) AS BIGINT)) AS BIGINT) AS s,
          COUNT(*) AS n
-  FROM customer WHERE c_acctbal > 0.0
+  FROM {customer} WHERE c_acctbal > 0.0
 )
 SELECT c_mktsegment,
        COUNT(*) AS n_custs,
        CAST(SUM(CAST(ROUND(c_acctbal * 100.0) AS BIGINT)) AS BIGINT)
          AS total_cents
-FROM customer CROSS JOIN avg_bal
+FROM {customer} CROSS JOIN avg_bal
 WHERE CAST(ROUND(c_acctbal * 100.0) AS BIGINT) * n > s
   AND NOT EXISTS (
-    SELECT 1 FROM orders
+    SELECT 1 FROM {orders}
     WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
 GROUP BY c_mktsegment
 """
 
 
-@op("query_dormant_rich_customers", tags=("relational", "analytics", "subquery"), oracle=_Q22_SQL)
+@op("query_dormant_rich_customers", tags=("relational", "analytics", "subquery"), oracle=_plain(_Q22_SQL))
 def query_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity, segment standing in for
     phone country code): customers with above-average positive balance and
@@ -833,16 +845,15 @@ def query_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     `cents * n > sum_cents` — no division, so boundary membership cannot
     flip between engines — and the one-row aggregate rides a broadcast
     nested-loop join; the NOT EXISTS decorrelates to a left-anti hash join
-    on the customer key. The oracle is this exact same text."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_Q22_SQL)
+    on the customer key. The oracle is the same template."""
+    return _on_tables(spark, sf_dir, _Q22_SQL)
 
 
 _LATERAL_SQL = """
 SELECT n_name, t.c_name, t.bal_cents
-FROM nation, LATERAL (
+FROM {nation}, LATERAL (
   SELECT c_name, CAST(ROUND(c_acctbal * 100.0) AS BIGINT) AS bal_cents
-  FROM customer
+  FROM {customer}
   WHERE c_nationkey = n_nationkey
   ORDER BY bal_cents DESC, c_name
   LIMIT 2
@@ -850,7 +861,7 @@ FROM nation, LATERAL (
 """
 
 
-@op("query_lateral_topk", tags=("relational", "analytics", "subquery"), oracle=_LATERAL_SQL)
+@op("query_lateral_topk", tags=("relational", "analytics", "subquery"), oracle=_plain(_LATERAL_SQL))
 def query_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery — top-2 customers by balance FOR EACH
     nation, written as the per-row subquery a user reaches for first.
@@ -862,8 +873,7 @@ def query_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LATERAL natively); exact-cents sort key with a name tie-break keeps
     the LIMIT cut deterministic. Completes the subquery surface next to
     the EXISTS / NOT EXISTS / scalar-agg shapes."""
-    _views(spark, sf_dir, "nation", "customer")
-    return spark.sql(_LATERAL_SQL)
+    return _on_tables(spark, sf_dir, _LATERAL_SQL)
 
 
 _Q7_ORACLE = f"""

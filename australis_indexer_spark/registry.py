@@ -102,7 +102,19 @@ def op(
     tags: tuple[str, ...] = (),
     doc: str = "",
 ):
-    """Register an engine op. Used as a decorator over (spark, sf_dir) -> DataFrame."""
+    """Register an engine op. Used as a decorator over (spark, sf_dir) -> DataFrame.
+
+    Building an op's plan may run Spark work: an op that reads an
+    intermediate more than once materializes it while it builds, by one of
+    two rules. An intermediate read only while the plan is built (a truth
+    set that a tuning loop reads) is ``cache()``d and ``unpersist()``ed in
+    ``finally``. An intermediate that the returned frame reads is an eager
+    ``localCheckpoint``: its lineage is cut, so if an executor holding its
+    blocks is lost before the caller's action finishes, that job fails
+    instead of recomputing (DEPLOY.md §6). Ops register no views or other
+    named state in the session catalog: a SQL-text intermediate is handed
+    to ``spark.sql`` as a DataFrame argument, whose generated view name
+    PySpark drops once the text is analyzed."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:

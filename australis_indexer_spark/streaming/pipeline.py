@@ -119,19 +119,21 @@ def stream_shuffle(spark: SparkSession):
     config-invariance matrix runs the whole registry at 1 and 7 shuffle
     partitions), so this is a cost knob, not a semantic one.
 
-    Parameterised, not a host constant: ``SPARK_GRAFT_STREAM_SHUFFLE``
-    overrides; the default is min(8, defaultParallelism). At 100 TB the
-    operative value is CLUSTER_CONF's shuffle width — state partitions
-    there are sized to key cardinality/throughput, and the checkpoint pins
-    them per query exactly as here. The conf is session-global while the
-    query runs (restored afterwards); ops in this repo start streams
-    sequentially within a session."""
+    The bound is min(8, defaultParallelism). At 100 TB the operative value
+    is CLUSTER_CONF's shuffle width — state partitions there are sized to
+    key cardinality/throughput, and the checkpoint pins them per query
+    exactly as here.
+
+    The save and restore of the session-wide ``spark.sql.shuffle.partitions``
+    is the one piece of shared session state left for streaming ops, and it
+    is kept as it was: while a streaming query runs under it, every other
+    query planned in the same session sees the bound too, and two streaming
+    ops that overlap can restore each other's value. Ops in this repo start
+    streams sequentially within a session; concurrent callers should keep
+    streaming ops on separate sessions."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    n = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE") or str(
-        min(8, spark.sparkContext.defaultParallelism)
-    )
-    spark.conf.set(key, n)
+    spark.conf.set(key, str(min(8, spark.sparkContext.defaultParallelism)))
     try:
         yield
     finally:

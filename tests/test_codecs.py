@@ -181,12 +181,11 @@ _ZSTD_GOLDEN_FRAME = bytes.fromhex(
 
 
 def test_zstd_branch_always_registered():
-    """The ZSTD wire branch EXECUTES in every environment now: the real
-    `zstandard` wheel when present, else pyarrow's bundled libzstd
-    (standard frames — the reference's exact wire format, indexer
-    main.rs:370). r3 shipped this branch gated behind a wheel the
-    container lacks, i.e. never-run code; this pins that it cannot
-    regress to that state."""
+    """The ZSTD wire branch EXECUTES in every environment: pyarrow's
+    bundled libzstd (standard frames — the reference's exact wire format,
+    indexer main.rs:370), with no optional wheel in front of it. r3 shipped
+    this branch gated behind a wheel the container lacks, i.e. never-run
+    code; this pins that it cannot regress to that state."""
     assert "ZSTD" in codecs.CODECS
     for payload in (b"", b"x", _ZSTD_GOLDEN_PAYLOAD, bytes(range(256)) * 1024):
         assert codecs.decompress(codecs.compress(payload, "ZSTD"), "ZSTD") == payload

@@ -754,14 +754,11 @@ def udf_python_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                     hashlib.md5(chunk.encode("utf-8")).hexdigest(),
                 )
 
-    name = "aispark_split_chunks"
-    spark.udtf.register(name, SplitChunks)
-    return spark.sql(
-        f"""
-        SELECT d.doc_id, c.chunk_idx, c.chunk_len, c.chunk_md5
-        FROM {{docs}} d, LATERAL {name}(d.text) c
-        """,
-        docs=lt(spark, sf_dir, "documents"),
+    # a DataFrame lateral join calls the UDTF without registering a
+    # session function under a fixed name
+    docs = lt(spark, sf_dir, "documents").alias("d")
+    return docs.lateralJoin(SplitChunks(F.col("d.text").outer())).select(
+        "doc_id", "chunk_idx", "chunk_len", "chunk_md5"
     )
 
 

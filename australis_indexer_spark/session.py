@@ -64,6 +64,15 @@ from pyspark.sql import SparkSession
 # the directory that holds the package, for the Python workers' sys.path
 _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+
+def _default_driver_memory(phys_bytes: int) -> str:
+    """Half the host's physical memory, capped at the 48g a 128 GiB box
+    gets. A fixed 48g let the driver JVM grow past a small host's memory:
+    an sf0.1 registry walk on a 15 GB host was OOM-killed."""
+    mib = phys_bytes // 2 // 2**20
+    return "48g" if mib >= 48 * 1024 else f"{mib}m"
+
+
 # Tuned for the driver's harness: single JVM, local[32], 128 GiB box.
 _LOCAL_DEFAULTS: dict[str, str] = {
     # AQE re-plans at runtime: coalesces small shuffle partitions, converts
@@ -90,7 +99,8 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # (borealis-indexer/src/main.rs:370 — zstd payload compression)
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or _default_driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
     # the driver's events.parquet carries INT64 TIMESTAMP(NANOS) which Spark
     # has no native type for; read as LongType ns and convert in the loader
     "spark.sql.legacy.parquet.nanosAsLong": "true",

@@ -23,13 +23,13 @@ import json
 import os
 import re
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from australis_indexer_spark.registry import load_all
 from australis_indexer_spark.session import get_session
+from australis_indexer_spark.telemetry import measure
 
 HEADLINE = (
     "agg_hash_pricing_summary",      # scan+filter+groupBy+sort (TPC-H Q1 shape)
@@ -58,15 +58,13 @@ def main() -> None:
 
     # one warm-up pass on the smallest table so JVM/codegen/Arrow init cost
     # does not land on the first measured query
-    ops["agg_hash_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    measure(spark, ops["agg_hash_pricing_summary"].fn, sf_dir)
 
     # best-of-N per query: the suite runs on a shared VM, and a concurrent
     # load spike multiplies every wall-clock uniformly (the r02 26.8s-vs-16.2s
     # scare was exactly this). The MIN over interleaved repeats is the
     # load-robust estimator of the plan's actual cost — and every repeat is
-    # CACHE-COLD: `clearCache()` runs before each suite pass, so ops that
+    # CACHE-COLD: `measure()` runs `clearCache()` before each op, so ops that
     # `.cache()` intermediates re-compute them from the scan every time
     # (r3's best-of-3 silently re-served CacheManager entries on repeats 2-3
     # and reported warm re-execution; VERDICT r3 "What's wrong" #1).
@@ -76,11 +74,9 @@ def main() -> None:
     best: dict[str, float] = {}
     cold: dict[str, float] = {}
     for _ in range(n_runs):
-        spark.catalog.clearCache()
         for name in HEADLINE:
-            t0 = time.perf_counter()
-            ops[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+            rec = measure(spark, ops[name].fn, sf_dir)
+            dt = rec["build_s"] + rec["exec_s"]
             if name not in cold:
                 cold[name] = dt
             if name not in best or dt < best[name]:

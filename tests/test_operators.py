@@ -2231,7 +2231,9 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
       storage over a registry walk;
     - the session catalog holds no new temporary view: a fixed-name view is
       swapped out by a second call on other data, replaces views a user
-      registered, and keeps its plan's blocks reachable for the session.
+      registered, and keeps its plan's blocks reachable for the session;
+    - the session holds no new function: a fixed-name UDF or UDTF
+      registration replaces one a user registered under that name.
     When checkpointed blocks are freed is up to the JVM's garbage
     collector, so ``getPersistentRDDs`` is not asserted on."""
     s = spark.newSession()
@@ -2241,7 +2243,11 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
     def temp_views():
         return {t.name for t in s.catalog.listTables() if t.isTemporary}
 
+    def functions():
+        return {f.name for f in s.catalog.listFunctions()}
+
     views_before = temp_views()
+    functions_before = functions()
     for name in (
         "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
@@ -2269,6 +2275,8 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
     )
     left = temp_views() - views_before
     assert not left, f"operators left temporary views behind: {sorted(left)}"
+    left = functions() - functions_before
+    assert not left, f"operators left functions registered: {sorted(left)}"
 
 
 def test_ops_share_one_session_concurrently(spark, ops):

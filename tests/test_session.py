@@ -301,6 +301,14 @@ def test_no_jdk_compiler_keeps_stock_filesystem(monkeypatch):
     assert not set(_NIO_KEYS) & set(session._LOCAL_DEFAULTS)
 
 
+def test_default_driver_memory_is_half_the_host_capped_at_48g():
+    gib = 2**30
+    assert session._default_driver_memory(128 * gib) == "48g"
+    assert session._default_driver_memory(96 * gib) == "48g"
+    assert session._default_driver_memory(96 * gib - 2 * 2**20) == "49151m"
+    assert session._default_driver_memory(15 * 10**9) == "7152m"
+
+
 def test_cluster_conf_keeps_stock_filesystems():
     assert not [k for k in session.CLUSTER_CONF if k.startswith("spark.hadoop.fs.")]
 

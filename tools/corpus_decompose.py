@@ -11,10 +11,10 @@ sf0.1 and the derived 10x/100x decade-stress replicas of `documents`
 (same construction as tools/scale_stress.py: verbatim text, doc_id
 shifted by replica*2^32 — so every replica group is an R-way exact
 duplicate, and the doc_id%10 eval split ROTATES across replicas because
-2^32 % 10 == 6). Alongside, run the REAL registered op in a UI-enabled
-session and aggregate shuffle read/write bytes per stage from the
-status REST API. Per-decade log-log exponents of each stage count and
-of total shuffle bytes then attribute the wall-clock bend.
+2^32 % 10 == 6). Alongside, time the REAL registered op with
+``telemetry.measure`` and sum the shuffle read/write bytes of its stages
+from the app status store. Per-decade log-log exponents of each stage
+count and of total shuffle bytes then attribute the wall-clock bend.
 
 Writes the '### pipeline_corpus_build decomposition' subsection of
 SCALING.md (replacing any previous run) and prints one JSON line.
@@ -26,9 +26,7 @@ from __future__ import annotations
 
 import json
 import math
-import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -42,36 +40,12 @@ from australis_indexer_spark.operators.curation import (
     _ngrams,
 )
 from australis_indexer_spark.registry import load_all
-from tools.docsplice import splice_section
-from tools.shuffle_telemetry import _stages, _ui_session
+from australis_indexer_spark.session import get_session
+from australis_indexer_spark.telemetry import measure
+from tools.docsplice import fmt_bytes, splice_section
+from tools.scale_stress import FACTORS, OUT_BASE, RUNS, SRC, build
 
-SRC = "/root/testdata/sf0.1"
-OUT_BASE = os.environ.get("SPARK_GRAFT_STRESS_DIR", "/tmp/aispark_sfstress")
-STRIDE = 2**32
-FACTORS = (10, 100)
 _MARK = "### pipeline_corpus_build decomposition"
-
-
-def _build_documents(spark, replicas: int, out: str) -> None:
-    """documents-only decade replica (the op reads nothing else); same
-    key-stride construction as tools/scale_stress.py:build."""
-    os.makedirs(out, exist_ok=True)
-    dst = os.path.join(out, "documents.parquet")
-    marker = os.path.join(dst, "_SUCCESS")
-    src_path = os.path.join(SRC, "documents.parquet")
-    if os.path.exists(marker) and os.path.getmtime(marker) >= os.path.getmtime(
-        src_path
-    ):
-        return
-    base = spark.read.parquet(src_path)
-    out_df = None
-    for i in range(replicas):
-        rep = base.withColumn(
-            "doc_id", (F.col("doc_id") + F.lit(i * STRIDE)).cast("long")
-        )
-        out_df = rep if out_df is None else out_df.unionByName(rep)
-    out_df.write.mode("overwrite").parquet(dst)
-    print(f"built documents {replicas}x -> {dst}", flush=True)
 
 
 def _stage_counts(spark, sf_dir: str) -> dict[str, int]:
@@ -177,62 +151,37 @@ def _stage_counts(spark, sf_dir: str) -> dict[str, int]:
     return c
 
 
-def _run_op_with_shuffle(spark, fn, sf_dir: str) -> tuple[float, int, int, list]:
-    """min-of-2 cache-cold wall time for the REAL op, plus per-run shuffle
-    read/write bytes (from the run whose wall time was the min) and the
-    top stages by shuffle write."""
-    best = (math.inf, 0, 0, [])
-    for _ in range(2):
-        spark.catalog.clearCache()
-        before = _stages(spark)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        after = _stages(spark)
-        new = {k: v for k, v in after.items() if k not in before}
-        rd = sum(s.get("shuffleReadBytes", 0) for s in new.values())
-        wr = sum(s.get("shuffleWriteBytes", 0) for s in new.values())
-        top = sorted(
-            (
-                (s.get("shuffleWriteBytes", 0), s.get("name", ""))
-                for s in new.values()
-            ),
-            reverse=True,
-        )[:4]
-        if dt < best[0]:
-            best = (dt, rd, wr, top)
-    return best
-
-
 def _exp(a: float, b: float) -> float:
     return math.log(b / max(a, 1e-9)) / math.log(10)
 
 
-def _fmt(n: int) -> str:
-    for u in ("B", "KiB", "MiB", "GiB"):
-        if n < 1024 or u == "GiB":
-            return f"{n:.1f} {u}" if u != "B" else f"{n} B"
-        n /= 1024
-    return f"{n:.1f} GiB"
-
-
 def main() -> None:
-    spark = _ui_session()
+    spark = get_session("corpus_decompose")
     ops = load_all()
     fn = ops["pipeline_corpus_build"].fn
 
     datasets = [("sf0.1 (1x)", SRC)]
     for f in FACTORS:
+        # documents-only replicas: the op reads nothing else
         out = f"{OUT_BASE}_corpusdoc_{f}"
-        _build_documents(spark, f, out)
+        build(spark, f, out, facts={"documents": ("doc_id",)}, dims=())
         datasets.append((f"{f}x", out))
 
     rows = []
     for label, path in datasets:
         counts = _stage_counts(spark, path)
-        wall, rd, wr, top = _run_op_with_shuffle(spark, fn, path)
+        # the real op: the min-wall run of RUNS, with that run's shuffle
+        # bytes and its top stages by shuffle write
+        rec = min(
+            (measure(spark, fn, path) for _ in range(RUNS)),
+            key=lambda r: r["build_s"] + r["exec_s"],
+        )
+        wall = rec["build_s"] + rec["exec_s"]
+        wr = sum(w for _, w, _ in rec["stages"])
+        rd = sum(r for _, _, r in rec["stages"])
+        top = sorted(((w, n) for n, w, _ in rec["stages"]), reverse=True)[:4]
         rows.append((label, counts, wall, rd, wr, top))
-        print(f"{label}: wall={wall:.2f}s shuffle_wr={_fmt(wr)} {counts}", flush=True)
+        print(f"{label}: wall={wall:.2f}s shuffle_wr={fmt_bytes(wr)} {counts}", flush=True)
 
     keys = list(rows[0][1])
     lines = [
@@ -258,15 +207,15 @@ def main() -> None:
     wrs = [r[4] for r in rows]
     rds = [r[3] for r in rows]
     lines += [
-        f"| wall (s, real op, min of 2) | {walls[0]:.2f} | {walls[1]:.2f} | {walls[2]:.2f} "
+        f"| wall (s, real op, min of {RUNS}) | {walls[0]:.2f} | {walls[1]:.2f} | {walls[2]:.2f} "
         f"| {_exp(walls[0], walls[1]):+.2f} | {_exp(walls[1], walls[2]):+.2f} |",
-        f"| shuffle write | {_fmt(wrs[0])} | {_fmt(wrs[1])} | {_fmt(wrs[2])} "
+        f"| shuffle write | {fmt_bytes(wrs[0])} | {fmt_bytes(wrs[1])} | {fmt_bytes(wrs[2])} "
         f"| {_exp(wrs[0], wrs[1]):+.2f} | {_exp(wrs[1], wrs[2]):+.2f} |",
-        f"| shuffle read | {_fmt(rds[0])} | {_fmt(rds[1])} | {_fmt(rds[2])} "
+        f"| shuffle read | {fmt_bytes(rds[0])} | {fmt_bytes(rds[1])} | {fmt_bytes(rds[2])} "
         f"| {_exp(rds[0], rds[1]):+.2f} | {_exp(rds[1], rds[2]):+.2f} |",
         "",
         "Top shuffle-write stages at 100x: "
-        + "; ".join(f"{_fmt(b)} — {n[:60]}" for b, n in rows[2][5] if b),
+        + "; ".join(f"{fmt_bytes(b)} — {n[:60]}" for b, n in rows[2][5] if b),
         "",
     ]
 

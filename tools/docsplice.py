@@ -1,11 +1,13 @@
-"""Shared marker-bounded section splicing for the SCALING.md tools.
+"""Shared helpers for the SCALING.md tools: marker-bounded section
+splicing and the one byte formatter their tables use.
 
-One function, one boundary rule, one guard — so the class of bug that
-ate the `### pipeline_corpus_build decomposition` section in round 8
+One splice function, one boundary rule, one guard — so the class of bug
+that ate the `### pipeline_corpus_build decomposition` section in round 8
 (VERDICT r8 "What's wrong #1": tools/state_scale.py stopped only at
 `\\n## `, so a trailing ###-level section after its marker was silently
-swallowed to EOF) is unwritable.  Both tools/state_scale.py and
-tools/corpus_decompose.py import `splice_section` from here.
+swallowed to EOF) is unwritable.  Every tool that writes a SCALING.md
+section (scaling_curve, shuffle_telemetry, scale_stress, corpus_decompose,
+state_scale) writes it through `splice_section`.
 
 Rules:
 - The marker must sit at the START of a line, outside any ``` / ~~~
@@ -98,3 +100,12 @@ def splice_section(
             f"(does the body contain a {end_marks} heading?); refusing"
         )
     path.write_text(new)
+
+
+def fmt_bytes(n: int) -> str:
+    """``n`` bytes in binary units: ``973 B``, ``3.9 KiB``, ``1.2 GiB``."""
+    for unit in ("B", "KiB", "MiB"):
+        if n < 1024:
+            return f"{n} B" if unit == "B" else f"{n:.1f} {unit}"
+        n /= 1024
+    return f"{n:.1f} GiB"

@@ -1,8 +1,9 @@
 """Per-op build-vs-exec profiling + before/after plan capture (guide §1).
 
-For each headline op: time (a) plan CONSTRUCTION — the ``fn(spark, sf_dir)``
-call, py4j + parse + any tuning collects — and (b) EXECUTION — the noop-sink
-write of the returned frame — separately, min over N cache-cold reps. This
+For each headline op, ``telemetry.measure`` times (a) plan CONSTRUCTION —
+the ``fn(spark, sf_dir)`` call, py4j + parse + any tuning collects — and (b)
+EXECUTION — the noop-sink write of the returned frame — separately; each
+half is the min over N cache-cold reps. This
 splits the bench seconds into the driver-side and executor-side halves so an
 optimization targets the one that is actually paying (r10 showed plan
 construction dominates several headline ops at sf0.1).
@@ -16,7 +17,6 @@ Usage: python tools/profile_headline.py [sf_dir] [reps] [<tag>/<suffix>] [ops...
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -24,6 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from bench import HEADLINE
 from australis_indexer_spark.registry import load_all
 from australis_indexer_spark.session import get_session
+from australis_indexer_spark.telemetry import measure
 
 
 def main() -> None:
@@ -36,23 +37,13 @@ def main() -> None:
     spark = get_session("profile")
     ops = load_all()
 
-    # warm-up
-    ops[names[0]].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    measure(spark, ops[names[0]].fn, sf_dir)  # warm-up
 
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / tag
     rows = []
     for name in names:
-        tb, te = [], []
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = ops[name].fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            tb.append(t1 - t0)
-            te.append(t2 - t1)
-        rows.append((name, min(tb), min(te)))
+        recs = [measure(spark, ops[name].fn, sf_dir) for _ in range(reps)]
+        rows.append((name, min(r["build_s"] for r in recs), min(r["exec_s"] for r in recs)))
         if suffix:
             plans_dir.mkdir(parents=True, exist_ok=True)
             df = ops[name].fn(spark, sf_dir)

@@ -18,12 +18,10 @@ a stress that grows QUADRATICALLY in R for every pair-emitting dedup op
 (an R-way verbatim group emits R·(R-1)/2 pairs).
 
 Writes datasets under $SPARK_GRAFT_STRESS_DIR (default
-/tmp/aispark_sfstress) + "_<factor>", runs the bench HEADLINE ops
-cache-cold (min of $SPARK_GRAFT_STRESS_RUNS, default 2) at each factor,
-prints one JSON line per factor, and rewrites the "## Decade stress"
-section of SCALING.md with per-decade log-log exponents.
-
-Factors via $SPARK_GRAFT_STRESS_FACTORS (comma list, default "10,100").
+/tmp/aispark_sfstress) + "_<factor>" for FACTORS (10x and 100x), times the
+bench HEADLINE ops with ``telemetry.measure`` (min of RUNS cache-cold
+passes) at each factor, prints one JSON line per factor, and splices the
+"## Decade stress" section of SCALING.md with per-decade log-log exponents.
 """
 
 from __future__ import annotations
@@ -32,7 +30,6 @@ import json
 import math
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -43,12 +40,13 @@ from pyspark.sql import functions as F
 from bench import HEADLINE
 from australis_indexer_spark.registry import load_all
 from australis_indexer_spark.session import get_session
+from australis_indexer_spark.telemetry import measure
+from tools.docsplice import splice_section
 
 SRC = "/root/testdata/sf0.1"
 OUT_BASE = os.environ.get("SPARK_GRAFT_STRESS_DIR", "/tmp/aispark_sfstress")
-FACTORS = tuple(
-    int(x) for x in os.environ.get("SPARK_GRAFT_STRESS_FACTORS", "10,100").split(",")
-)
+FACTORS = (10, 100)
+RUNS = 2
 STRIDE = 2**32  # one uniform key offset: every cross-table FK survives
 
 # fact tables: every *key* column shifts by replica*STRIDE; dims copy once
@@ -61,6 +59,7 @@ _FACT_KEYS = {
     "embeddings": ("vec_id",),
 }
 _DIMS = ("region", "nation", "part", "supplier")
+_MARK = "## Decade stress"
 
 
 def _reusable(dst: str, src_path: str) -> bool:
@@ -78,14 +77,16 @@ def _reusable(dst: str, src_path: str) -> bool:
         return False
 
 
-def build(spark, replicas: int, out: str) -> None:
+def build(spark, replicas: int, out: str, facts=_FACT_KEYS, dims=_DIMS) -> None:
+    """Write the ``replicas``-fold derived copy of the ``facts`` tables and
+    a single copy of the ``dims`` under ``out``."""
     os.makedirs(out, exist_ok=True)
-    for t in _DIMS:
+    for t in dims:
         src_path = os.path.join(SRC, f"{t}.parquet")
         dst = os.path.join(out, f"{t}.parquet")
         if not _reusable(dst, src_path):
             spark.read.parquet(src_path).write.mode("overwrite").parquet(dst)
-    for t, keys in _FACT_KEYS.items():
+    for t, keys in facts.items():
         dst = os.path.join(out, f"{t}.parquet")
         if _reusable(dst, os.path.join(SRC, f"{t}.parquet")):
             continue
@@ -100,85 +101,39 @@ def build(spark, replicas: int, out: str) -> None:
         print(f"built {t}: {replicas}x", flush=True)
 
 
-def measure(spark, ops, out: str, n_runs: int) -> dict[str, float]:
-    best: dict[str, float] = {}
-    for _ in range(n_runs):
-        spark.catalog.clearCache()
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            ops[name].fn(spark, out).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if name not in best or dt < best[name]:
-                best[name] = dt
-            print(f"  {name}: {dt:.2f}s", flush=True)
-    return {n: round(best[n], 3) for n in HEADLINE}
-
-
-def main() -> None:
-    # Parse the sf0.1 base-point column from SCALING.md's curve table
-    # BEFORE any dataset build or measurement: if the table is missing or
-    # its ops no longer match HEADLINE, fail in milliseconds with a clear
-    # message instead of crashing on an empty max() after hours of 10x/100x
-    # builds (round-6 tools review).
-    md = REPO / "SCALING.md"
-    text = md.read_text() if md.exists() else ""
-    mark = "## Decade stress"
-    if mark in text:
-        text = text[: text.index(mark)].rstrip() + "\n"
+def sf01_points(text: str) -> dict[str, float]:
+    """The sf0.1 column of the curve table, the SCALING.md section before
+    the first ``## `` heading (tools/scaling_curve.py writes it)."""
     sf01: dict[str, float] = {}
-    for line in text.splitlines():
+    for line in text.split("\n## ")[0].splitlines():
         parts = [p.strip() for p in line.split("|")]
         if len(parts) >= 6 and parts[1] in HEADLINE:
             try:
                 sf01[parts[1]] = float(parts[4])
             except ValueError:
                 pass
-    if not sf01:
-        raise SystemExit(
-            "scale_stress: no HEADLINE rows with an sf0.1 column found in "
-            "SCALING.md — regenerate the curve table first "
-            "(python tools/scaling_curve.py)"
-        )
+    return sf01
 
-    spark = get_session("scale_stress")
-    ops = load_all()
-    n_runs = int(os.environ.get("SPARK_GRAFT_STRESS_RUNS", "2"))
 
-    # warm-up (JVM/codegen) on the small source, then measure per factor
-    ops[HEADLINE[0]].fn(spark, SRC).write.format("noop").mode("overwrite").save()
-
-    results: dict[int, dict[str, float]] = {}
-    for fac in FACTORS:
-        out = f"{OUT_BASE}_{fac}"
-        build(spark, fac, out)
-        results[fac] = measure(spark, ops, out, n_runs)
-        print(json.dumps({
-            "metric": "decade_stress_total",
-            "value": round(sum(results[fac].values()), 3),
-            "unit": "sec",
-            "queries": results[fac],
-            "sf": 0.1 * fac,
-            "methodology": f"{fac}x sf0.1 derived (key-stride replicas), "
-            f"min of {n_runs} cache-cold passes",
-        }), flush=True)
-
-    # rewrite the SCALING.md section using the sf0.1 base points parsed
-    # (and validated) up front
-    facs = sorted(FACTORS)
+def write_section(
+    md: Path, sf01: dict[str, float], results: dict[int, dict[str, float]]
+) -> tuple[str, float]:
+    """Splice the decade-stress section for ``results`` (factor -> op ->
+    seconds) into ``md``; returns the steepest (op, sf0.1 → top exponent)."""
+    facs = sorted(results)
     hdr_sfs = " | ".join(f"sf{0.1 * f:g} ({f}x)" for f in facs)
     hdr_exp = " | ".join(
         f"exp {'0.1' if i == 0 else f'{0.1 * facs[i - 1]:g}'}→{0.1 * f:g}"
         for i, f in enumerate(facs)
     )
     lines = [
-        "",
-        mark + f" ({', '.join(str(f) + 'x' for f in facs)} sf0.1, derived)",
+        _MARK + f" ({', '.join(str(f) + 'x' for f in facs)} sf0.1, derived)",
         "",
         "Beyond the shipped data: the sf0.1 tables replicated with a uniform",
         "2^32 key stride (FKs preserved per replica; dims single-copy;",
         "text/embeddings verbatim — an R-way-duplicate stress whose dedup",
         "pair output grows ~R² by construction). Cache-cold min of",
-        f"{n_runs}. `exp` is the per-step log-log slope; ~1.0 = linear in",
+        f"{RUNS}. `exp` is the per-step log-log slope; ~1.0 = linear in",
         "data, the design target for shuffle-bound plans (pair-emitting",
         "dedup ops may legitimately exceed 1.0 here — their OUTPUT grows",
         "quadratically in the replica count).",
@@ -186,9 +141,8 @@ def main() -> None:
         f"| op | sf0.1 | {hdr_sfs} | {hdr_exp} |",
         "|---|---|" + "---|" * (2 * len(facs)),
     ]
-    for n in HEADLINE:
-        if n not in sf01 or sf01[n] <= 0:
-            continue
+    based = [n for n in HEADLINE if sf01.get(n, 0) > 0]
+    for n in based:
         cells = [f"{sf01[n]:.2f}"]
         exps = []
         prev_t, prev_f = sf01[n], 1
@@ -200,14 +154,9 @@ def main() -> None:
         lines.append(f"| {n} | " + " | ".join(cells + exps) + " |")
     top_f = facs[-1]
     worst = max(
-        (
-            (n, math.log(results[top_f][n] / sf01[n]) / math.log(top_f))
-            for n in HEADLINE
-            if n in sf01 and sf01[n] > 0
-        ),
+        ((n, math.log(results[top_f][n] / sf01[n]) / math.log(top_f)) for n in based),
         key=lambda x: x[1],
-        # belt-and-braces: sf01 is validated non-empty up front, but a
-        # table of all-0.00 base points would still empty the generator
+        # a table of all-0.00 base points leaves no op to rank
         default=("(none)", 0.0),
     )
     lines += [
@@ -216,7 +165,50 @@ def main() -> None:
         f"`{worst[0]}` at {worst[1]:+.2f}.",
         "",
     ]
-    md.write_text(text + "\n".join(lines))
+    splice_section(md, _MARK, "\n".join(lines) + "\n")
+    return worst
+
+
+def main() -> None:
+    # Parse the sf0.1 base points BEFORE any dataset build or measurement:
+    # if the curve table is missing or its ops no longer match HEADLINE,
+    # fail in milliseconds instead of after hours of 10x/100x builds.
+    md = REPO / "SCALING.md"
+    sf01 = sf01_points(md.read_text() if md.exists() else "")
+    if not sf01:
+        raise SystemExit(
+            "scale_stress: no HEADLINE rows with an sf0.1 column found in "
+            "SCALING.md — regenerate the curve table first "
+            "(python tools/scaling_curve.py)"
+        )
+
+    spark = get_session("scale_stress")
+    ops = load_all()
+    measure(spark, ops[HEADLINE[0]].fn, SRC)  # warm-up (JVM/codegen)
+
+    results: dict[int, dict[str, float]] = {}
+    for fac in FACTORS:
+        out = f"{OUT_BASE}_{fac}"
+        build(spark, fac, out)
+        best: dict[str, float] = {}
+        for _ in range(RUNS):
+            for name in HEADLINE:
+                rec = measure(spark, ops[name].fn, out)
+                dt = rec["build_s"] + rec["exec_s"]
+                best[name] = min(dt, best.get(name, dt))
+                print(f"  {name}: {dt:.2f}s", flush=True)
+        results[fac] = {n: round(best[n], 3) for n in HEADLINE}
+        print(json.dumps({
+            "metric": "decade_stress_total",
+            "value": round(sum(results[fac].values()), 3),
+            "unit": "sec",
+            "queries": results[fac],
+            "sf": 0.1 * fac,
+            "methodology": f"{fac}x sf0.1 derived (key-stride replicas), "
+            f"min of {RUNS} cache-cold passes",
+        }), flush=True)
+
+    worst = write_section(md, sf01, results)
     print(
         f"SCALING.md decade-stress section updated "
         f"(steepest {worst[0]} {worst[1]:+.2f})"

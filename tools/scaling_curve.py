@@ -2,7 +2,7 @@
 report per-query wall time plus the sf0.01 → sf0.1 scaling exponent.
 
 The point of the artifact (SCALING.md): show that headline operators scale
-*sublinearly-to-linearly* with data volume on a fixed 32-core box — i.e.
+*sublinearly-to-linearly* with data volume at a fixed core count — i.e.
 their cost is shuffle/compute-bound, not driver- or plan-bound. An operator
 whose time is flat across 100× data is overhead-dominated at these sizes
 (fine); one whose exponent is ≥ ~1 is data-bound and its 100 TB behavior is
@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import math
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -27,39 +26,30 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from bench import HEADLINE
 from australis_indexer_spark.registry import load_all
 from australis_indexer_spark.session import get_session
+from australis_indexer_spark.telemetry import measure
+from tools.docsplice import splice_section
 
 SFS = ("0.001", "0.01", "0.1")
 REPEATS = 3  # take the min: strips GC/JIT/page-cache noise, keeps the
-             # data-bound cost (repeats are cache-cold via clearCache below)
+             # data-bound cost (every measure() run is cache-cold)
+_MARK = "# SCALING — headline suite across scale factors"
 
 
 def main() -> None:
     spark = get_session("scaling")
     ops = load_all()
     # warm-up: JVM/codegen/Arrow init off the measured runs
-    ops[HEADLINE[0]].fn(spark, f"/root/testdata/sf{SFS[0]}").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    measure(spark, ops[HEADLINE[0]].fn, f"/root/testdata/sf{SFS[0]}")
 
     times: dict[str, dict[str, float]] = {}
     for sf in SFS:
         sf_dir = f"/root/testdata/sf{sf}"
         for name in HEADLINE:
-            best = math.inf
-            for _ in range(REPEATS):
-                # cache-cold repeats, same methodology as bench.py: ops
-                # that .cache() intermediates must re-compute them, so MIN
-                # measures the plan, not CacheManager re-serves
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                ops[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            times.setdefault(name, {})[sf] = best
+            recs = [measure(spark, ops[name].fn, sf_dir) for _ in range(REPEATS)]
+            times.setdefault(name, {})[sf] = min(r["build_s"] + r["exec_s"] for r in recs)
 
     lines = [
-        "# SCALING — headline suite across scale factors (local[32])",
+        f"{_MARK} (defaultParallelism {spark.sparkContext.defaultParallelism})",
         "",
         "Wall-clock seconds (best of %d) per op per sf; `exp` is the log-log"
         % REPEATS,
@@ -84,20 +74,13 @@ def main() -> None:
         f"Steepest exponent: `{worst[0]}` at {worst[1]:+.2f}.",
         "",
     ]
-    # splice, don't clobber: SCALING.md also carries hand-maintained
-    # sections (## Round-to-round bench noise — irreplaceable ambient-band
-    # observations) and other tools' spliced sections (## Shuffle-bytes
-    # telemetry, ## Decade stress). This tool owns only the top curve
-    # section, up to the first "## " header (round-6 tools review —
-    # shuffle_telemetry.py and scale_stress.py already splice).
-    out = Path(__file__).resolve().parent.parent / "SCALING.md"
-    rest = ""
-    if out.exists():
-        old = out.read_text()
-        cut = old.find("\n## ")
-        if cut != -1:
-            rest = old[cut:]
-    out.write_text("\n".join(lines).rstrip("\n") + "\n" + rest)
+    # this tool owns only the top curve section; the other tools' sections
+    # and the hand-kept ones below it survive byte for byte
+    splice_section(
+        Path(__file__).resolve().parent.parent / "SCALING.md",
+        _MARK,
+        "\n".join(lines) + "\n",
+    )
     print(f"SCALING.md written ({len(HEADLINE)} ops × {len(SFS)} sfs); "
           f"steepest {worst[0]} {worst[1]:+.2f}")
 

@@ -5,8 +5,9 @@ behavior is HOW MANY BYTES each plan moves through the shuffle. This tool
 runs the two steepest-exponent ops (`dedup_minhash_lsh`, whose cost is the
 band self-join shuffle, and `join_skew_salted`, whose salted-dim replication
 is linear in SALT_BUCKETS) across all three scale factors and records, per
-stage, the shuffle read/write volume from Spark's status REST API — the same
-numbers the cluster UI shows at 100 TB.
+stage, the shuffle read/write volume that ``telemetry.measure`` reads from
+Spark's app status store with the UI off — the same numbers the cluster UI
+shows at 100 TB.
 
 Usage: python tools/shuffle_telemetry.py   (rewrites the telemetry section
 of SCALING.md in place; run AFTER tools/scaling_curve.py)
@@ -14,17 +15,15 @@ of SCALING.md in place; run AFTER tools/scaling_curve.py)
 
 from __future__ import annotations
 
-import json
 import sys
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession
-
 from australis_indexer_spark.registry import load_all
-from australis_indexer_spark.session import _LOCAL_DEFAULTS
+from australis_indexer_spark.session import get_session
+from australis_indexer_spark.telemetry import measure
+from tools.docsplice import fmt_bytes, splice_section
 
 OPS = (
     "dedup_minhash_lsh",
@@ -54,94 +53,28 @@ SFS = ("0.001", "0.01", "0.1")
 _MARK = "## Shuffle-bytes telemetry"
 
 
-def _ui_session() -> SparkSession:
-    """Own session with the UI/status API on (the shared factory disables
-    it); must run in a fresh process so getOrCreate doesn't reuse a UI-less
-    JVM."""
-    b = SparkSession.builder.master("local[32]").appName("shuffle_telemetry")
-    for k, v in {**_LOCAL_DEFAULTS, "spark.ui.enabled": "true"}.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def _stages(spark: SparkSession) -> dict[tuple[int, int], dict]:
-    base = spark.sparkContext.uiWebUrl
-    (app,) = json.load(
-        urllib.request.urlopen(f"{base}/api/v1/applications", timeout=10)
-    )
-    out = {}
-    for st in json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app['id']}/stages?status=complete",
-            timeout=10,
-        )
-    ):
-        out[(st["stageId"], st["attemptId"])] = st
-    return out
-
-
-def _fmt_bytes(n: int) -> str:
-    for unit in ("B", "KiB", "MiB", "GiB"):
-        if n < 1024 or unit == "GiB":
-            return f"{n:.0f} {unit}" if unit == "B" else f"{n / 1.0:.1f} {unit}"
-        n /= 1024
-    return f"{n:.1f} GiB"
-
-
 def main() -> None:
-    spark = _ui_session()
+    spark = get_session("shuffle_telemetry")
     ops = load_all()
-    # warm-up with an op OUTSIDE the measured set (measuring an op that just
-    # cached its own signature frame would reuse the exchange and report 0)
-    ops["agg_hash_pricing_summary"].fn(spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    def _stages_quiesced():
-        """The status store is fed by the ASYNC listener bus: right after a
-        job returns, its last stages' completion events can still be queued,
-        so an immediate snapshot would credit them to the NEXT op's diff.
-        Poll until the stage set is stable across a short window (round-6
-        tools review)."""
-        import time as _t
-
-        prev = _stages(spark)
-        for _ in range(20):
-            _t.sleep(0.15)
-            cur = _stages(spark)
-            if set(cur) == set(prev):
-                return cur
-            prev = cur
-        return prev
+    # warm-up with an op outside the measured set
+    measure(spark, ops["agg_hash_pricing_summary"].fn, "/root/testdata/sf0.001")
 
     rows = []  # (op, sf, n_shuffle_stages, write_bytes, read_bytes, per_stage)
     for name in OPS:
         for sf in SFS:
-            seen = set(_stages_quiesced())
-            ops[name].fn(spark, f"/root/testdata/sf{sf}").write.format(
-                "noop"
-            ).mode("overwrite").save()
-            new = {k: v for k, v in _stages_quiesced().items() if k not in seen}
-            shuf = [
-                s
-                for s in new.values()
-                if s["shuffleWriteBytes"] or s["shuffleReadBytes"]
-            ]
-            w = sum(s["shuffleWriteBytes"] for s in shuf)
-            r = sum(s["shuffleReadBytes"] for s in shuf)
-            per_stage = sorted(
-                (s["shuffleWriteBytes"], s["shuffleReadBytes"]) for s in shuf
-            )
+            rec = measure(spark, ops[name].fn, f"/root/testdata/sf{sf}")
+            shuf = [(w, r) for _, w, r in rec["stages"] if w or r]
+            w = sum(x for x, _ in shuf)
+            r = sum(x for _, x in shuf)
+            per_stage = sorted(shuf)
             rows.append((name, sf, len(shuf), w, r, per_stage))
             print(f"{name} sf{sf}: {len(shuf)} shuffle stages, "
-                  f"write {_fmt_bytes(w)}, read {_fmt_bytes(r)}")
+                  f"write {fmt_bytes(w)}, read {fmt_bytes(r)}")
 
     lines = [
         _MARK,
         "",
-        "Bytes moved through the shuffle per op per sf (status REST API,",
+        "Bytes moved through the shuffle per op per sf (app status store,",
         "summed over the query's shuffle stages; per-stage write volumes in",
         "the last column, sorted). Wall-clock at these sizes is",
         "overhead-dominated — shuffle VOLUME is the quantity that scales",
@@ -153,27 +86,17 @@ def main() -> None:
         "|---|---|---|---|---|---|",
     ]
     for name, sf, n, w, r, per_stage in rows:
-        detail = ", ".join(_fmt_bytes(x) for x, _ in per_stage if x) or "-"
+        detail = ", ".join(fmt_bytes(x) for x, _ in per_stage if x) or "-"
         lines.append(
-            f"| {name} | {sf} | {n} | {_fmt_bytes(w)} | {_fmt_bytes(r)} | {detail} |"
+            f"| {name} | {sf} | {n} | {fmt_bytes(w)} | {fmt_bytes(r)} | {detail} |"
         )
     lines.append("")
 
-    md = Path(__file__).resolve().parent.parent / "SCALING.md"
-    text = md.read_text()
-    if not text.endswith("\n\n"):  # blank line before the appended heading
-        text = text.rstrip("\n") + "\n\n"
-    tail = ""
-    if _MARK in text:
-        # replace ONLY this tool's section: keep everything after the next
-        # "## " heading (e.g. the decade-stress section scale_stress.py
-        # appends — an earlier version truncated it)
-        start = text.index(_MARK)
-        nxt = text.find("\n## ", start + len(_MARK))
-        if nxt != -1:
-            tail = "\n" + text[nxt + 1:]
-        text = text[:start].rstrip() + "\n\n"
-    md.write_text(text + "\n".join(lines) + tail)
+    splice_section(
+        Path(__file__).resolve().parent.parent / "SCALING.md",
+        _MARK,
+        "\n".join(lines) + "\n",
+    )
     print("SCALING.md telemetry section updated")
 
 

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from australis_indexer_spark.fixtures import FIXTURE_START_HEIGHT
-from tools.docsplice import splice_section
+from tools.docsplice import fmt_bytes, splice_section
 from australis_indexer_spark.session import get_session
 
 ROCKSDB = (
@@ -64,14 +64,6 @@ ROCKSDB = (
     "RocksDBStateStoreProvider"
 )
 _MARK = "## Streaming state scale under RocksDB"
-
-
-def _fmt_bytes(n: int) -> str:
-    for unit in ("B", "KiB", "MiB", "GiB"):
-        if n < 1024 or unit == "GiB":
-            return f"{n:.1f} {unit}" if unit != "B" else f"{n} B"
-        n /= 1024
-    return f"{n} GiB"
 
 
 def _write_batch_file(df, src: str, stamped: set, batch_idx: int) -> None:
@@ -314,7 +306,7 @@ def main() -> int:
             for batch_id, n_in, cum, n_state, sst in rows:
                 lines.append(
                     f"| {name} | {batch_id} | {n_in} | {cum} | {n_state} "
-                    f"| {_fmt_bytes(sst)} |"
+                    f"| {fmt_bytes(sst)} |"
                 )
             final_state = rows[-1][3]
             peak_state = max(r[3] for r in rows)

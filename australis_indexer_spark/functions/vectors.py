@@ -8,11 +8,10 @@ similarity/dedup oracle. sqrt and the final division are single IEEE ops.
 Construction cost matters as much as run cost here: the Column-by-Column
 form of a fold (two HOF builders + lambda plumbing) is ~15 py4j round-trips
 per call site, and the similarity operators instantiate dozens of folds per
-plan. When the operands are plain column names the functions therefore emit
-ONE `F.expr` whose SQL parses JVM-side in a single call and resolves to the
+plan. Every function here therefore takes column NAMES and emits ONE
+`F.expr` whose SQL parses JVM-side in a single call and resolves to the
 IDENTICAL expression tree (same sequential fold, same `0.0D` zero, same
-operator shape) — results are bit-for-bit unchanged. Column-typed operands
-keep the original builder path.
+operator shape) — results are bit-for-bit those of the builder form.
 
 At scale these run inside whole-stage codegen; for very high dimensions a
 vectorized pandas UDF (numpy einsum per Arrow batch) is the drop-in upgrade
@@ -27,23 +26,6 @@ from pyspark.sql import functions as F
 
 def _dot_sql(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-
-
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product of two array<double> columns."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"SQRT({_dot_sql(a, a)})")
-    return F.sqrt(dot(a, a))
 
 
 def with_norm(
@@ -72,7 +54,7 @@ def with_norm(
     if spread:
         sc = df.sparkSession.sparkContext
         df = df.repartition(sc.defaultParallelism)
-    df = df.withColumn(out, norm(emb_col))
+    df = df.withColumn(out, F.expr(f"SQRT({_dot_sql(emb_col, emb_col)})"))
     if not keep_zero:
         df = df.filter(F.col(out) > 0.0)
     return df

@@ -588,13 +588,15 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     current; the stateful passes (cross-doc dedup, decontamination) run as
     the periodic `pipeline_corpus_build` batch behind it."""
     import os
-    import tempfile
+
+    from ..streaming.pipeline import start_drained, stream_session
 
     schema = lt(spark, sf_dir, "documents").schema
     base = scratch_dir(prefix="aispark_ingest_")
     sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     src = (
-        spark.readStream.schema(schema)
+        stream_session(spark)
+        .readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
@@ -634,14 +636,11 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("toks", "grams")
     )
-    from ..streaming.pipeline import start_drained
-
-    q = start_drained(
+    start_drained(
         curated.writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark,
+        .trigger(availableNow=True)
     )
     return spark.read.parquet(sink)
 

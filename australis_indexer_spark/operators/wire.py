@@ -17,7 +17,6 @@ the coverage checklist maps one-to-one:
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -326,21 +325,25 @@ def sink_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     subject-keyed topic dir (the engine's bus abstraction); Spark task retry
     + idempotent replace of the batch replaces the reference's infinite
     500 ms retry loop (main.rs:388-401). Emits per-subject publish counts."""
-    from ..streaming.pipeline import read_block_stream, shared_stream_source, start_drained
+    from ..streaming.pipeline import (
+        read_block_stream,
+        shared_stream_source,
+        start_drained,
+        stream_session,
+    )
 
     base = scratch_dir(prefix="aispark_pub_")
     topic, ckpt = (os.path.join(base, d) for d in ("topic", "ckpt"))
     src = shared_stream_source(spark)
-    env = wrap_envelope(read_block_stream(spark, src), compression=None)
+    env = wrap_envelope(read_block_stream(stream_session(spark), src), compression=None)
 
     def publish(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").partitionBy("subject").parquet(topic)
 
-    q = start_drained(
+    start_drained(
         env.writeStream.foreachBatch(publish)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark,
+        .trigger(availableNow=True)
     )
     return (
         spark.read.parquet(topic)
@@ -659,11 +662,6 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     disk but never appeared in the scan). Both sides therefore define the
     ingest domain as non-empty blobs; audit empty objects with a storage
     inventory, not a content scan."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     docs = lt(spark, sf_dir, "documents").where(
         (F.col("doc_id") % 20 == 0) & (F.length("text") > 0)
     )
@@ -673,14 +671,10 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bottleneck this op warns against (VERDICT r3 #5). Requires the
     # executors and the scan-back to share a filesystem — true in local
     # mode and on any cluster whose sinks live on shared storage, the same
-    # contract every file sink in this engine already assumes.
-    tag = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"aispark_blobs_{tag}")
-    # a prior run of the same dataset may have exported under a different
-    # filename scheme (or a doc set that has since changed) — stale .bin
-    # files would silently join the scan, so the export dir starts empty
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    # contract every file sink in this engine already assumes. Each call
+    # exports to its own fresh directory, so no stale .bin file from an
+    # earlier run or a concurrent call can join the scan.
+    out = scratch_dir(prefix="aispark_blobs_")
 
     def _write_blobs(rows) -> None:
         for r in rows:
@@ -739,7 +733,6 @@ def scan_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole source — the connector plumbing (partition planning, options,
     schema) is what's value-checked."""
     from ..sources.blockstream import register
-    from ..streaming.pipeline import start_drained
 
     register(spark)
     return (
@@ -763,18 +756,16 @@ def scan_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding every height exactly once across the three runs; the
     closed-form oracle equals the one-shot batch read, which IS the
     exactly-once-across-restarts claim."""
-    import os
-    import tempfile
-
     from ..sources.blockstream import register
-    from ..streaming.pipeline import start_drained
+    from ..streaming.pipeline import start_drained, stream_session
 
-    register(spark)
+    session = stream_session(spark)
+    register(session)
     base = scratch_dir(prefix="aispark_blocksrc_")
     sink_d, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
     for head in (63700, 63800, 63900):
-        q = start_drained(
-            spark.readStream.format("australis_blocks")
+        start_drained(
+            session.readStream.format("australis_blocks")
             .option("start", 63600)
             .option("end", head)
             .load()
@@ -782,8 +773,7 @@ def scan_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("path", sink_d)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True),
-            spark,
+            .trigger(availableNow=True)
         )
     return spark.read.parquet(sink_d)
 
@@ -810,10 +800,7 @@ def sink_custom_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish -> re-scan the published JSONL with an explicit schema ->
     aggregate; matching the closed-form oracle proves the sink lost and
     duplicated nothing."""
-    import tempfile
-
     from ..sources.blockstream import register
-    from ..streaming.pipeline import start_drained
 
     register(spark)
     out = scratch_dir(prefix="aispark_pub_") + "/published"

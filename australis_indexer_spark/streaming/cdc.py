@@ -27,7 +27,7 @@ from ..scratch import scratch_dir
 from ..registry import op
 from ..sources.batch import load_table as lt
 from .harness import split_into_batches
-from .pipeline import start_drained
+from .pipeline import start_drained, stream_session
 
 N_STATE_BUCKETS = 8  # 1000+ on a real cluster: the unit of state rewrite
 
@@ -116,13 +116,13 @@ def run_cdc_upsert(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         apply_batch(state, batch)
 
     q = start_drained(
-        spark.readStream.schema(merged_schema)
+        stream_session(spark)
+        .readStream.schema(merged_schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(upsert)
         .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True),
-        spark,
+        .trigger(availableNow=True)
     )
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     out = spark.read.parquet(state).select(

@@ -35,7 +35,6 @@ its dedup state twice.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,10 +105,17 @@ def shared_stream_source(
     return d
 
 
-@contextmanager
-def stream_shuffle(spark: SparkSession):
-    """Bound the state-store instance count for a streaming query.
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The session a streaming op builds its queries on: a clone of the
+    caller's, so the op writes nothing to the caller's session.
 
+    The clone carries the caller's runtime conf, temporary views, UDFs and
+    registered data sources, and the caller's streaming-query listeners
+    are added to it so progress reports still reach them. A memory sink's
+    view lands in the clone's catalog, not the caller's. Two ops running
+    at once on one session therefore share no conf and no sink name.
+
+    The one conf set on the clone bounds the state-store instance count.
     A stateful micro-batch pays a fixed cost PER state-store instance per
     batch (provider load, commit, snapshot bookkeeping), and the instance
     count is pinned to ``spark.sql.shuffle.partitions`` at query start.
@@ -117,39 +123,41 @@ def stream_shuffle(spark: SparkSession):
     pure overhead (measured: stream_stream_join_outcomes 15 s → 5 s at
     sf0.01 going 32 → 8). Results are partition-count invariant (the
     config-invariance matrix runs the whole registry at 1 and 7 shuffle
-    partitions), so this is a cost knob, not a semantic one.
-
-    The bound is min(8, defaultParallelism). At 100 TB the operative value
-    is CLUSTER_CONF's shuffle width — state partitions there are sized to
+    partitions), so this is a cost knob, not a semantic one. The bound is
+    min(8, defaultParallelism); at 100 TB the operative value is
+    CLUSTER_CONF's shuffle width — state partitions there are sized to
     key cardinality/throughput, and the checkpoint pins them per query
-    exactly as here.
-
-    The save and restore of the session-wide ``spark.sql.shuffle.partitions``
-    is the one piece of shared session state left for streaming ops, and it
-    is kept as it was: while a streaming query runs under it, every other
-    query planned in the same session sees the bound too, and two streaming
-    ops that overlap can restore each other's value. Ops in this repo start
-    streams sequentially within a session; concurrent callers should keep
-    streaming ops on separate sessions."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(min(8, spark.sparkContext.defaultParallelism)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    exactly as here."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    clone.conf.set(
+        "spark.sql.shuffle.partitions", str(min(8, spark.sparkContext.defaultParallelism))
+    )
+    streams = clone._jsparkSession.streams()
+    for listener in spark._jsparkSession.streams().listListeners():
+        streams.addListener(listener)
+    return clone
 
 
-def start_drained(writer, spark: SparkSession):
-    """Start a streaming writer under ``stream_shuffle`` and drain it.
-
-    Every availableNow query in the package goes through here so the
-    state-partition bound applies uniformly; returns the (terminated)
+def start_drained(writer) -> StreamingQuery:
+    """Start a streaming writer and wait until it terminates (an
+    availableNow query does once it has drained its source); returns the
     query handle for progress inspection."""
-    with stream_shuffle(spark):
-        q = writer.start()
-        q.awaitTermination()
+    q = writer.start()
+    q.awaitTermination()
     return q
+
+
+def drain_to_memory(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Drain ``stream`` into a memory sink and return the sink's rows. The
+    sink's view is registered on the session ``stream`` was built on — a
+    ``stream_session`` clone — so one fixed name serves every op."""
+    start_drained(
+        stream.writeStream.format("memory")
+        .queryName("memory_sink")
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    return stream.sparkSession.table("memory_sink")
 
 
 def read_block_stream(
@@ -208,7 +216,7 @@ def run_pipeline(
     - S3 `scan_backfill_mode`: ``available_now`` drains the backlog then
       stops (WaitForFullSync); False would run live micro-batches.
     """
-    env = to_envelope_stream(read_block_stream(spark, src_dir))
+    env = to_envelope_stream(read_block_stream(stream_session(spark), src_dir))
     if from_height is not None:
         env = env.filter(F.col("sequence_id") >= from_height)
     if dedup:
@@ -234,7 +242,7 @@ def run_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return start_drained(writer, spark)
+    return start_drained(writer)
 
 
 def write_batch_idempotent(batch: DataFrame, batch_id: int, sink_dir: str) -> None:
@@ -352,14 +360,11 @@ def window_time_stream_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partial aggregation happens map-side per micro-batch; state is
     one row per (hour, type) in the state store."""
-    import uuid
-
     events = lt(spark, sf_dir, "events")
     src = scratch_dir(prefix="aispark_ev_src_")
-    sink_tbl = f"stream_hourly_{uuid.uuid4().hex[:12]}"
     events.write.mode("overwrite").parquet(src)
 
-    stream = spark.readStream.schema(events.schema).option(
+    stream = stream_session(spark).readStream.schema(events.schema).option(
         "maxFilesPerTrigger", 8
     ).parquet(src)
     agg = (
@@ -373,14 +378,7 @@ def window_time_stream_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    q = start_drained(
-        agg.writeStream.format("memory")
-        .queryName(sink_tbl)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-    )
-    return spark.table(sink_tbl)
+    return drain_to_memory(agg, "complete")
 
 
 from ..sources.batch import TABLES as _TABLES
@@ -426,12 +424,11 @@ def stream_stream_join_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
     receipts is evicted). At 100 TB this is the canonical enrichment join:
     state is keyed by receipt_id, sharded with the shuffle, bounded by the
     watermark horizon instead of growing forever."""
-    import uuid
-
     src = shared_stream_source(spark)
+    session = stream_session(spark)
 
     def block_stream() -> DataFrame:
-        return read_block_stream(spark, src).withColumn(
+        return read_block_stream(session, src).withColumn(
             "event_time",
             F.timestamp_micros(
                 (F.col("block.header.timestamp") / F.lit(1000)).cast("long")
@@ -492,15 +489,7 @@ def stream_stream_join_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gas_burnt",
         (F.col("out_height") - F.col("rcpt_height")).alias("lag_blocks"),
     )
-    sink_tbl = f"ssj_{uuid.uuid4().hex[:12]}"
-    q = start_drained(
-        joined.writeStream.format("memory")
-        .queryName(sink_tbl)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        spark,
-    )
-    return spark.table(sink_tbl)
+    return drain_to_memory(joined, "append")
 
 
 @op("sink_retention", tags=("parity", "sink", "streaming"), oracle=FO.retention_oracle)
@@ -516,7 +505,7 @@ def sink_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink_d, ckpt = (os.path.join(base, d) for d in ("sink", "ckpt"))
     src = shared_stream_source(spark)
     # bucket every 16 blocks so the 48-block fixture yields 3 buckets
-    env = to_envelope_stream(read_block_stream(spark, src))
+    env = to_envelope_stream(read_block_stream(stream_session(spark), src))
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         (
@@ -527,11 +516,10 @@ def sink_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink_d)
         )
 
-    q = start_drained(
+    start_drained(
         env.writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark,
+        .trigger(availableNow=True)
     )
 
     keep_newest = 2
@@ -696,9 +684,10 @@ def window_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", F.expr(_EVT).alias("evt")
     )
     events.repartition(4).write.mode("overwrite").parquet(src)
+    session = stream_session(spark)
 
     def run_once() -> None:
-        stream = spark.readStream.schema(events.schema).parquet(src)
+        stream = session.readStream.schema(events.schema).parquet(src)
         agg = (
             stream.withWatermark("evt", "0 seconds")
             .groupBy(F.session_window("evt", _SESSION_GAP).alias("w"), "user_id")
@@ -709,13 +698,12 @@ def window_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("user_id", "session_start", "session_end", "n_events")
         )
-        q = start_drained(
+        start_drained(
             agg.writeStream.format("parquet")
             .option("path", sink_d)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True),
-            spark,
+            .trigger(availableNow=True)
         )
 
     run_once()  # drains the real events; last-open sessions remain in state
@@ -791,8 +779,6 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     trading completeness against state size, and this op is the audit
     that the trade is enforced — across job restarts, which is where
     hand-built batch loops silently regress."""
-    import uuid
-
     # tz-free instant column (NTZ-as-UTC) for the watermark clock, shifted
     # +1e6 days (see _EVT_WM — Spark's watermark starts at epoch 0, which
     # would born-late-drop pre-epoch events); all OUTPUT values stay on
@@ -804,9 +790,10 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(prefix="aispark_late_")
     src, sink_d, ckpt = (os.path.join(base, d) for d in ("src", "sink", "ckpt"))
     events.coalesce(1).write.mode("append").parquet(src)
+    session = stream_session(spark)
 
     def run_once():
-        stream = spark.readStream.schema(events.schema).parquet(src)
+        stream = session.readStream.schema(events.schema).parquet(src)
         agg = (
             stream.withWatermark("evt", "1 hour")
             .groupBy(F.window("evt", "1 hour").alias("w"), "event_type")
@@ -816,15 +803,13 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("h").alias("hour_start"), "event_type", "n_events")
         )
-        q = start_drained(
+        return start_drained(
             agg.writeStream.format("parquet")
             .option("path", sink_d)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True),
-            spark,
+            .trigger(availableNow=True)
         )
-        return q
 
     run_once()  # on-time pass: watermark reaches max(evt) - 1h, persisted
     # Each planted row gets its OWN far-past hour bucket (1900-01-01 +

@@ -35,7 +35,7 @@ from ..functions.det import cents
 from ..registry import op
 from ..sources.batch import load_table as lt
 from .harness import split_into_batches, state_versions
-from .pipeline import start_drained
+from .pipeline import drain_to_memory, start_drained, stream_session
 
 
 def _rollup(df: DataFrame) -> DataFrame:
@@ -86,13 +86,13 @@ def run_incremental_rollup(spark: SparkSession, sf_dir: str) -> tuple[DataFrame,
         )
 
     q = start_drained(
-        spark.readStream.schema(ev.schema)
+        stream_session(spark)
+        .readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(fold)
         .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True),
-        spark,
+        .trigger(availableNow=True)
     )
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     out = spark.read.parquet(f"{state_base}{max(versions())}")
@@ -160,16 +160,13 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by event_type so the leaderboard is deterministic; the oracle restates
     both layers as one batch window query (epoch-aligned 6 h buckets,
     matching Spark's window() alignment)."""
-    import uuid
-
     from pyspark.sql import Window as W
 
     events = lt(spark, sf_dir, "events").select("ts", "event_type")
     src = scratch_dir(prefix="aispark_topk_src_")
-    sink_tbl = f"stream_topk_{uuid.uuid4().hex[:12]}"
     events.write.mode("overwrite").parquet(src)
 
-    stream = spark.readStream.schema(events.schema).option(
+    stream = stream_session(spark).readStream.schema(events.schema).option(
         "maxFilesPerTrigger", 8
     ).parquet(src)
     agg = (
@@ -177,18 +174,11 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    q = start_drained(
-        agg.writeStream.format("memory")
-        .queryName(sink_tbl)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-    )
     # NULL event_type is a real leaderboard row (missing type at ingest),
     # but on count ties a named type must outrank it — and the engines
     # disagree on default NULL order (Spark NULLS FIRST, DuckDB NULLS
     # LAST), so the tie-break pins NULLS LAST explicitly (nullstorm:141)
-    ranked = spark.table(sink_tbl).withColumn(
+    ranked = drain_to_memory(agg, "complete").withColumn(
         "rk",
         F.row_number().over(
             W.partitionBy("window_start").orderBy(
@@ -229,8 +219,6 @@ def stream_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle is the one-shot batch join-aggregate over ALL orders —
     four incremental delta-joins must land on exactly its integers."""
-    import uuid
-
     base = scratch_dir(prefix="aispark_ivm_")
     src = os.path.join(base, "src")
     state_base = os.path.join(base, "state_v")
@@ -278,13 +266,13 @@ def stream_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = delta
         merged.coalesce(1).write.mode("overwrite").parquet(f"{state_base}{batch_id}")
 
-    q = start_drained(
-        spark.readStream.schema(orders.schema)
+    start_drained(
+        stream_session(spark)
+        .readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(base, f"ckpt_{uuid.uuid4().hex[:8]}"))
-        .trigger(availableNow=True),
-        spark,
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
     )
     return spark.read.parquet(f"{state_base}{max(versions())}")

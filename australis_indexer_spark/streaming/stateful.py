@@ -18,7 +18,6 @@ Design rules for 100 TB:
 from __future__ import annotations
 
 import os
-import uuid
 from collections.abc import Iterable
 
 import numpy as np
@@ -33,7 +32,7 @@ from ..operators import fixture_oracles as FO
 from ..registry import op
 from ..sources.batch import load_table as lt
 from .harness import split_into_batches
-from .pipeline import start_drained
+from .pipeline import drain_to_memory, stream_session
 
 _RUNNING_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value DOUBLE"
 _STATE_SCHEMA = "n BIGINT, total BIGINT"
@@ -93,7 +92,8 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     src = scratch_dir(prefix="aispark_state_src_")
     events.write.mode("overwrite").parquet(src)
     stream = (
-        spark.readStream.schema(events.schema)
+        stream_session(spark)
+        .readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 8)
         .parquet(src)
     )
@@ -104,14 +104,7 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink_tbl = f"stateful_totals_{uuid.uuid4().hex[:12]}"
-    q = start_drained(
-        updates.writeStream.format("memory")
-        .queryName(sink_tbl)
-        .outputMode("update")
-        .trigger(availableNow=True),
-        spark,
-    )
+    out = drain_to_memory(updates, "update")
     # the FINAL emission per key is the answer. n_events is genuinely
     # monotone; total_value is only monotone while every value is
     # non-negative, so take the argmax EMISSION via a struct max keyed on
@@ -120,8 +113,7 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
     # return an intermediate running total
     m = F.max(F.struct("n_events", "total_value")).alias("m")
     return (
-        spark.table(sink_tbl)
-        .groupBy("user_id")
+        out.groupBy("user_id")
         .agg(m)
         .select(
             "user_id",
@@ -182,7 +174,7 @@ def stream_stateful_gap_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = shared_stream_source(spark)
-    env = to_envelope_stream(read_block_stream(spark, src)).withColumn(
+    env = to_envelope_stream(read_block_stream(stream_session(spark), src)).withColumn(
         "bucket", height_bucket_expr(size=16) * 16
     )
     updates = env.select("bucket", "sequence_id").groupBy("bucket").applyInPandasWithState(
@@ -192,16 +184,8 @@ def stream_stateful_gap_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink_tbl = f"gap_tracker_{uuid.uuid4().hex[:12]}"
-    q = start_drained(
-        updates.writeStream.format("memory")
-        .queryName(sink_tbl)
-        .outputMode("update")
-        .trigger(availableNow=True),
-        spark,
-    )
     final = (
-        spark.table(sink_tbl)
+        drain_to_memory(updates, "update")
         .groupBy("bucket")
         .agg(F.max("high_watermark").alias("high_watermark"), F.max("n_seen").alias("n_seen"))
     )
@@ -337,7 +321,7 @@ def stream_stateful_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ADVICE-r3 mtime rationale)
     split_into_batches(ev, "ts_us", src, rel_err=0.0, stamp_mtimes=True)
 
-    stream = spark.readStream.schema(ev.schema).option(
+    stream = stream_session(spark).readStream.schema(ev.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
     updates = stream.groupBy("user_id").applyInPandasWithState(
@@ -347,16 +331,8 @@ def stream_stateful_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink_tbl = f"cep_{uuid.uuid4().hex[:12]}"
-    q = start_drained(
-        updates.writeStream.format("memory")
-        .queryName(sink_tbl)
-        .outputMode("update")
-        .trigger(availableNow=True),
-        spark,
-    )
     final = (
-        spark.table(sink_tbl)
+        drain_to_memory(updates, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_clicks").alias("n_clicks"),

@@ -3,8 +3,6 @@ bucketed as-of join it promises actually plans shuffle-free."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,13 +21,13 @@ def test_asof_join_sides_share_bucketing():
     assert r.n_buckets == o.n_buckets
 
 
-def test_partitioned_write_prunes(spark, ops):
+def test_partitioned_write_prunes(spark, ops, tmp_path):
     """Writing through a layout yields partition-pruned scans."""
     df = ops["explode_outcomes"].fn(spark, "").withColumn(
         "height_bucket", (F.col("block_height") / 16).cast("long") * 16
     )
     lay = TableLayout("t", ("height_bucket",))
-    out = tempfile.mkdtemp(prefix="aispark_layout_")
+    out = str(tmp_path)
     apply_layout(df, lay, out)
     back = spark.read.parquet(out)
     one_bucket = back.filter(F.col("height_bucket") == 63_596 // 16 * 16)
@@ -122,7 +120,7 @@ def test_schema_evolution_nullfills(spark, ops):
     assert sum(r["n_with_quality"] for r in rows) == n_odd
 
 
-def test_plain_path_sort_by_is_applied_per_file(spark, ops):
+def test_plain_path_sort_by_is_applied_per_file(spark, ops, tmp_path):
     """Round-7 review: the non-bucketed writer path silently DROPPED
     sort_by — envelope_log's layout documents per-file height order as its
     read contract ('per-file sort keeps height order on read'), but the
@@ -130,7 +128,6 @@ def test_plain_path_sort_by_is_applied_per_file(spark, ops):
     shuffled frame through a sort_by layout and assert every individual
     parquet file is internally sorted on the key."""
     import glob
-    import tempfile
 
     df = (
         ops["explode_outcomes"].fn(spark, "")
@@ -138,7 +135,7 @@ def test_plain_path_sort_by_is_applied_per_file(spark, ops):
         .orderBy(F.reverse(F.col("receipt_id")))  # scramble height order
     )
     lay = TableLayout("t", ("height_bucket",), sort_by=("block_height",))
-    out = tempfile.mkdtemp(prefix="aispark_layout_sort_")
+    out = str(tmp_path)
     apply_layout(df, lay, out)
     files = glob.glob(out + "/height_bucket=*/*.parquet")
     assert files

@@ -147,7 +147,7 @@ def test_approx_percentiles_bounded(spark, ops):
         assert r["p50_exact"] <= r["p99_exact"]
 
 
-def test_minhash_estimates_true_jaccard(spark):
+def test_minhash_estimates_true_jaccard(spark, tmp_path):
     """Property: on planted near-duplicates, MinHash's estimated Jaccard
     tracks the exact 3-shingle Jaccard within the sketch's resolution."""
     import pyspark.sql.functions as F
@@ -162,9 +162,8 @@ def test_minhash_estimates_true_jaccard(spark):
         docs.append((i, text))
     df = spark.createDataFrame(docs, "doc_id long, text string")
     df.createOrReplaceTempView("documents")
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="aispark_prop_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
     est = {
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]
@@ -2236,7 +2235,13 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
       registration replaces one a user registered under that name.
     When checkpointed blocks are freed is up to the JVM's garbage
     collector, so ``getPersistentRDDs`` is not asserted on."""
+    from australis_indexer_spark.streaming.pipeline import shared_stream_source
+
     s = spark.newSession()
+    # the golden stream source is written once per process by whichever op
+    # first reads it; writing it here keeps the fixture frame it caches for
+    # the session (fixtures.blocks_df) out of the count
+    shared_stream_source(s)
     mgr = spark._jsparkSession.sharedState().cacheManager()
     before = mgr.cachedData().size()
 
@@ -2268,6 +2273,12 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
         "sim_ann_recall",
         "sim_ann_ivf_trained",
         "sim_ann_pq",
+        "stream_stateful_running_totals",
+        "stream_stateful_gap_tracker",
+        "stream_stateful_cep",
+        "stream_windowed_topk",
+        "window_time_stream_complete",
+        "stream_stream_join_outcomes",
     ):
         ops[name].fn(s, SF_SMOKE).write.format("noop").mode("overwrite").save()
     assert mgr.cachedData().size() == before, (
@@ -2279,17 +2290,36 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
     assert not left, f"operators left functions registered: {sorted(left)}"
 
 
+def test_scan_binary_files_leaves_no_export_dir(spark, ops, tmp_path, monkeypatch):
+    """scan_binary_files exports its blobs to a fresh directory under the
+    process scratch root, not to a fixed per-dataset directory in the
+    system temp dir that every call shares and nothing removes."""
+    import tempfile
+
+    from australis_indexer_spark.scratch import scratch_root
+
+    scratch_root()  # created before the temp dir moves, so it stays put
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert ops["scan_binary_files"].fn(spark, SF_SMOKE).collect()
+    assert not list(tmp_path.glob("aispark_blobs_*"))
+
+
 def test_ops_share_one_session_concurrently(spark, ops):
     """Two oracle runs on one session at once, on different data, both stay
     exact: ops keep no fixed-name session state that a concurrent call on
-    other data could swap out from under them. Non-streaming ops only:
-    streaming ops still save and restore the session-wide shuffle width
-    (streaming.pipeline.stream_shuffle)."""
+    other data could swap out from under them. The streaming op runs its
+    query on a clone of the session (streaming.pipeline.stream_session), so
+    its state width and memory sink are its own."""
     import threading
 
     from tools.diffcheck import connect_oracle, run_ops
 
-    only = {"dedup_minhash_lsh", "query_exists_late_orders", "agg_grouping_sets"}
+    only = {
+        "dedup_minhash_lsh",
+        "query_exists_late_orders",
+        "agg_grouping_sets",
+        "stream_stateful_running_totals",
+    }
     results, errors = {}, []
 
     def run(sf_dir):

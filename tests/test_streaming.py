@@ -7,8 +7,6 @@ cannot exercise multi-run streaming state through `queries()`.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import Window as W
@@ -24,10 +22,8 @@ START = 63_596  # fixture start height
 
 
 @pytest.fixture()
-def dirs():
-    base = tempfile.mkdtemp(prefix="aispark_t_stream_")
-    yield {d: os.path.join(base, d) for d in ("src", "sink", "ckpt")}
-    shutil.rmtree(base, ignore_errors=True)
+def dirs(tmp_path):
+    return {d: os.path.join(tmp_path, d) for d in ("src", "sink", "ckpt")}
 
 
 def test_checkpoint_resume_no_reprocess(spark, dirs):
@@ -372,19 +368,18 @@ def test_custom_source_stream_resumes_offsets(spark, ops):
     assert min(heights) == 63600 and max(heights) == 63899
 
 
-def test_custom_publish_manifest_atomic(spark, ops):
+def test_custom_publish_manifest_atomic(spark, ops, tmp_path):
     """The op's aggregate must conserve all heights, and the sink's
     two-phase commit leaves a manifest whose per-file counts sum to the
     full publish with no temp files surviving."""
     import glob
     import json
     import os
-    import tempfile
 
     from australis_indexer_spark.sources.blockstream import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="tst_pub_") + "/published"
+    out = str(tmp_path) + "/published"
     src = (
         spark.read.format("australis_blocks")
         .option("start", 63600)
@@ -437,13 +432,86 @@ def test_windowed_topk_matches_batch(spark, ops):
     }
 
 
-def test_rocksdb_state_store_provider(spark):
+def test_streaming_op_leaves_the_callers_shuffle_width(spark, ops):
+    """A streaming op runs its query on a clone of the caller's session
+    (streaming.pipeline.stream_session): another thread reading the
+    caller's spark.sql.shuffle.partitions sees the caller's value for the
+    whole run, the query's state width is the clone's bound, and a
+    listener on the caller still receives the query's progress."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from tests.conftest import SF_SMOKE
+
+    key = "spark.sql.shuffle.partitions"
+    s = spark.newSession()
+    s.conf.set(key, "13")
+    widths = []
+
+    class Widths(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            widths.extend(so.numShufflePartitions for so in event.progress.stateOperators)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    reads, done = [], threading.Event()
+
+    def poll():
+        while not done.is_set():
+            reads.append(s.conf.get(key))
+            time.sleep(0.002)
+
+    listener = Widths()
+    s.streams.addListener(listener)
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        ops["stream_stateful_running_totals"].fn(s, SF_SMOKE).collect()
+    finally:
+        done.set()
+        poller.join()
+        s.streams.removeListener(listener)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert reads and set(reads) == {"13"}, sorted(set(reads))
+    assert widths and set(widths) == {min(8, spark.sparkContext.defaultParallelism)}, widths
+
+
+def test_stream_session_is_a_clone_with_the_callers_conf(spark):
+    """stream_session returns a clone: it carries the caller's runtime conf
+    and temp views, and its own state width and views stay off the
+    caller."""
+    from australis_indexer_spark.streaming.pipeline import stream_session
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    s.conf.set("spark.sql.shuffle.partitions", "13")
+    s.range(3).createOrReplaceTempView("caller_view")
+    clone = stream_session(s)
+    assert clone.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    assert clone.table("caller_view").count() == 3
+    assert clone.conf.get("spark.sql.shuffle.partitions") == str(
+        min(8, spark.sparkContext.defaultParallelism)
+    )
+    clone.range(1).createOrReplaceTempView("clone_view")
+    assert s.conf.get("spark.sql.shuffle.partitions") == "13"
+    assert {t.name for t in s.catalog.listTables() if t.isTemporary} == {"caller_view"}
+
+
+def test_rocksdb_state_store_provider(spark, tmp_path):
     """The DEPLOY.md scale posture names RocksDB as the state store; this
     pins that the provider actually runs in this Spark build — a stateful
     streaming aggregation executes under RocksDB (provider-specific
     metrics present in progress) and lands on exactly the batch answer."""
     import os
-    import tempfile
     import uuid
 
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
@@ -452,7 +520,7 @@ def test_rocksdb_state_store_provider(spark):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        base = tempfile.mkdtemp(prefix="aispark_rocks_")
+        base = str(tmp_path)
         src = os.path.join(base, "src")
         tbl = f"rocks_{uuid.uuid4().hex[:10]}"
         df = spark.range(0, 5000).selectExpr("id % 13 AS k", "id AS v")
@@ -545,7 +613,7 @@ def test_stateful_cep_cross_batch_conversions(spark, ops):
         assert rows[uid]["n_converted"] == conv_map.get(uid, 0)
 
 
-def test_custom_publish_abort_leaves_nothing_visible(spark, ops):
+def test_custom_publish_abort_leaves_nothing_visible(spark, ops, tmp_path):
     """The negative half of the sink's exactly-once contract: when the
     publish JOB fails (one task raises mid-stream), the two-phase commit
     must leave NOTHING visible at the sink root — no part files, no
@@ -555,7 +623,6 @@ def test_custom_publish_abort_leaves_nothing_visible(spark, ops):
     publish or the state before it, never a partial one."""
     import glob
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import IntegerType
@@ -563,7 +630,7 @@ def test_custom_publish_abort_leaves_nothing_visible(spark, ops):
     from australis_indexer_spark.sources.blockstream import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="tst_pub_abort_") + "/published"
+    out = str(tmp_path) + "/published"
     src = (
         spark.read.format("australis_blocks")
         .option("start", 63600)
@@ -587,7 +654,7 @@ def test_custom_publish_abort_leaves_nothing_visible(spark, ops):
     assert leftovers == [], f"aborted publish left visible state: {leftovers}"
 
 
-def test_cdc_upsert_replay_and_out_of_order_converge(spark):
+def test_cdc_upsert_replay_and_out_of_order_converge(spark, tmp_path):
     """The foreachBatch contract is at-least-once: a batch may be applied
     AGAIN after its state was already merged (retry after a crash between
     state write and checkpoint commit), and in a backfill the change files
@@ -596,8 +663,6 @@ def test_cdc_upsert_replay_and_out_of_order_converge(spark):
     order. This drives the EXACT function the stream calls
     (cdc.apply_batch), not a reimplementation."""
     import os
-    import shutil
-    import tempfile
 
     from australis_indexer_spark.streaming.cdc import (
         N_STATE_BUCKETS,
@@ -621,7 +686,7 @@ def test_cdc_upsert_replay_and_out_of_order_converge(spark):
         df = spark.read.parquet(path)
         return sorted(map(tuple, df.collect()))
 
-    base = tempfile.mkdtemp(prefix="tst_cdc_replay_")
+    base = str(tmp_path)
     forward = os.path.join(base, "fwd")
     for b in batches:
         apply_batch(forward, b)
@@ -637,14 +702,13 @@ def test_cdc_upsert_replay_and_out_of_order_converge(spark):
     for b in reversed(batches):
         apply_batch(backward, b)
     assert state_rows(backward) == expect, "fold order changed the state"
-    shutil.rmtree(base, ignore_errors=True)
 
 
 import pytest as _pytest
 
 
 @_pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
-def test_stateful_state_survives_query_restart(spark, provider):
+def test_stateful_state_survives_query_restart(spark, provider, tmp_path):
     """applyInPandasWithState state must live in the CHECKPOINT's state
     store, not the query object: run the running-totals stream over wave-1
     files (availableNow terminates), then drop wave-2 files and start a
@@ -657,7 +721,6 @@ def test_stateful_state_survives_query_restart(spark, provider):
     the long-lived deployment runs RocksDB, so the restart proof must
     cover snapshot+changelog recovery, not just the HDFS-backed default)."""
     import os
-    import tempfile
 
     _ROCKS = (
         "org.apache.spark.sql.execution.streaming.state."
@@ -683,7 +746,7 @@ def test_stateful_state_survives_query_restart(spark, provider):
 
         sf = "/root/testdata/sf0.001"
         events = load_table(spark, sf, "events")
-        base = tempfile.mkdtemp(prefix="tst_state_restart_")
+        base = str(tmp_path)
         src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
         out = os.path.join(base, "out")
         wave1 = events.filter(F.col("event_id") % 2 == 0)
@@ -753,7 +816,7 @@ def test_stateful_state_survives_query_restart(spark, provider):
                 spark.conf.set(conf_key, prev)
 
 
-def test_cep_pending_click_survives_query_restart(spark):
+def test_cep_pending_click_survives_query_restart(spark, tmp_path):
     """The sharpest stateful-restart shape: a PARTIAL pattern match must
     cross a checkpoint restart. Wave 1 delivers clicks with no purchase
     (they sit in per-user pending state when the query terminates); a
@@ -764,7 +827,6 @@ def test_cep_pending_click_survives_query_restart(spark):
     proving the pending-click NFA state lives in the state store, so a
     mid-pattern deploy restart loses nothing."""
     import os
-    import tempfile
 
     from australis_indexer_spark.streaming.stateful import (
         _CEP_SCHEMA,
@@ -789,7 +851,7 @@ def test_cep_pending_click_survives_query_restart(spark):
         (3, 31, "purchase", t0 + MIN_US),        # same-run control
     ]
 
-    base = tempfile.mkdtemp(prefix="tst_cep_restart_")
+    base = str(tmp_path)
     src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
 
@@ -834,14 +896,13 @@ def test_cep_pending_click_survives_query_restart(spark):
     assert final[3] == (1, 1), "same-run conversion broken"
 
 
-def test_gap_tracker_watermark_survives_query_restart(spark):
+def test_gap_tracker_watermark_survives_query_restart(spark, tmp_path):
     """The resume-point analog (FromInterruption): the gap tracker's
     (high-watermark, seen-count) state must carry across a checkpoint
     restart — wave 2 alone would report seen=5, only recovered state can
     report the full 10 — and a real gap introduced in wave 2 must be
     measurable against the recovered count."""
     import os
-    import tempfile
 
     from australis_indexer_spark.streaming.stateful import _gap_tracker
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -851,7 +912,7 @@ def test_gap_tracker_watermark_survives_query_restart(spark):
     # bucket 0 continues gap-free; bucket 1 SKIPS height 3 (a real gap)
     wave2 = [(0, h) for h in range(5, 10)] + [(1, h) for h in (4, 5)]
 
-    base = tempfile.mkdtemp(prefix="tst_gap_restart_")
+    base = str(tmp_path)
     src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
     out = os.path.join(base, "out")
 
@@ -917,7 +978,7 @@ def test_custom_source_empty_height_range_is_empty_df(spark, ops):
     assert df.count() == 0
 
 
-def test_custom_publish_republish_semantics(spark, ops):
+def test_custom_publish_republish_semantics(spark, ops, tmp_path):
     """Round-6 review: final part names were job-UNscoped (part-00000...),
     so a second publish os.replace()d the very files the first manifest
     still named — a reader holding that manifest could observe mixed
@@ -927,12 +988,11 @@ def test_custom_publish_republish_semantics(spark, ops):
     import glob
     import json
     import os
-    import tempfile
 
     from australis_indexer_spark.sources.blockstream import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="tst_repub_") + "/published"
+    out = str(tmp_path) + "/published"
 
     def publish(start, end, mode):
         (
@@ -973,7 +1033,7 @@ def test_custom_publish_republish_semantics(spark, ops):
     assert not glob.glob(os.path.join(out, "_tmp_*"))
 
 
-def test_custom_publish_commit_lock_serializes(spark):
+def test_custom_publish_commit_lock_serializes(spark, tmp_path):
     """ADVICE r6: the append-mode manifest merge is a read-modify-write, so
     concurrent committers must serialize. Unit-level checks of the O_EXCL
     lock protocol: a held lock blocks a second acquirer until timeout; a
@@ -981,14 +1041,13 @@ def test_custom_publish_commit_lock_serializes(spark):
     broken and acquired; and a completed publish leaves no lock behind."""
     import glob
     import os
-    import tempfile
     import time
 
     import pytest
 
     from australis_indexer_spark.sources.blockstream import _PublishWriter, register
 
-    out = tempfile.mkdtemp(prefix="tst_lock_")
+    out = str(tmp_path)
     w1 = _PublishWriter({"path": out})
     w2 = _PublishWriter({"path": out})
     lock = w1._acquire_commit_lock()
@@ -1034,7 +1093,7 @@ def test_custom_publish_commit_lock_serializes(spark):
     assert not glob.glob(os.path.join(sink, "_MANIFEST.json.*.tmp"))
 
 
-def test_custom_publish_stale_break_serializes_breakers(spark):
+def test_custom_publish_stale_break_serializes_breakers(spark, tmp_path):
     """ADVICE r7: the stale-break TOCTOU — two waiters both observing the
     same stale instance, the slower one's unlink deleting the winning
     breaker's FRESH lock — is closed by serializing breakers on an O_EXCL
@@ -1048,14 +1107,13 @@ def test_custom_publish_stale_break_serializes_breakers(spark):
     4. ownership re-verification before manifest promotion fails LOUDLY
        when the lock carries a different job id."""
     import os
-    import tempfile
     import time
 
     import pytest
 
     from australis_indexer_spark.sources.blockstream import _PublishWriter
 
-    out = tempfile.mkdtemp(prefix="tst_break_")
+    out = str(tmp_path)
     w1 = _PublishWriter({"path": out})
     w2 = _PublishWriter({"path": out})
 
@@ -1095,19 +1153,18 @@ def test_custom_publish_stale_break_serializes_breakers(spark):
         w2._assert_lock_ownership(lock)
 
 
-def test_split_into_batches_rejects_null_keys(spark):
+def test_split_into_batches_rejects_null_keys(spark, tmp_path):
     """ADVICE r6: the harness's chunk filters (key > lo AND key <= hi)
     exclude NULLs from every bucket — a nullable key column would lose
     rows from all micro-batches with no error. The contract is asserted:
     a NULL-keyed frame is rejected loudly, a null-free one still splits."""
     import os
-    import tempfile
 
     import pytest
 
     from australis_indexer_spark.streaming.harness import split_into_batches
 
-    src = tempfile.mkdtemp(prefix="tst_nullkey_")
+    src = str(tmp_path)
     df = spark.createDataFrame(
         [(1, "a"), (None, "b"), (3, "c")], "k BIGINT, v STRING"
     )
@@ -1119,7 +1176,7 @@ def test_split_into_batches_rejects_null_keys(spark):
     assert spark.read.parquet(src).count() == 2
 
 
-def test_split_into_batches_null_guard_adds_no_job(spark):
+def test_split_into_batches_null_guard_adds_no_job(spark, tmp_path):
     """ADVICE r7: the null-key guard previously ran a dedicated isEmpty()
     job that, in the common null-free case, scanned the whole key column.
     The guard now rides the approxQuantile pass as an observe() metric —
@@ -1127,7 +1184,6 @@ def test_split_into_batches_null_guard_adds_no_job(spark):
     frame must run exactly (bare approxQuantile jobs, measured as the
     baseline on the same frame) + n write jobs — i.e. zero jobs
     attributable to the guard."""
-    import tempfile
 
     from australis_indexer_spark.streaming.harness import split_into_batches
 
@@ -1144,7 +1200,7 @@ def test_split_into_batches_null_guard_adds_no_job(spark):
         sc.setJobGroup(None, None)
     baseline = len(sc.statusTracker().getJobIdsForGroup("nullguard-baseline"))
 
-    src = tempfile.mkdtemp(prefix="tst_nulljob_")
+    src = str(tmp_path)
     group = "nullguard-jobcount"
     sc.setJobGroup(group, "split_into_batches job audit")
     try:
@@ -1159,7 +1215,7 @@ def test_split_into_batches_null_guard_adds_no_job(spark):
     assert spark.read.parquet(src).count() == 100
 
 
-def test_custom_publish_concurrent_appends_lose_no_update(spark):
+def test_custom_publish_concurrent_appends_lose_no_update(spark, tmp_path):
     """End-to-end race of the ADVICE r6 lost-update class: FOUR publishers
     append to the same sink root concurrently (threads — the lock is
     file-based, so cross-thread exercises the same O_EXCL interleavings as
@@ -1172,13 +1228,12 @@ def test_custom_publish_concurrent_appends_lose_no_update(spark):
     import glob
     import json
     import os
-    import tempfile
     import threading
 
     from australis_indexer_spark.sources.blockstream import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="tst_race_") + "/published"
+    out = str(tmp_path) + "/published"
     ranges = [(63600, 63620), (63620, 63645), (63645, 63655), (63655, 63680)]
     errors = []
 

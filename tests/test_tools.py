@@ -1,6 +1,6 @@
 """Spark-free checks of the tools/ scripts: every module imports (a
 dangling import between tools fails here, not at the next manual run), and
-the decade-stress section write keeps the SCALING.md sections after it."""
+the generated SCALING.md sections keep the text around them."""
 
 from __future__ import annotations
 
@@ -46,3 +46,27 @@ def test_scale_stress_section_keeps_later_sections(tmp_path):
     assert new.endswith(text[tail:])
     name = HEADLINE[0]
     assert f"| {name} | {sf01[name]:.2f} | {results[10][name]:.2f} |" in new
+
+
+def test_corpus_decompose_section_keeps_attribution(tmp_path):
+    """The decomposition table is generated; the attribution under it is
+    hand-written under its own heading, so rewriting the table leaves it,
+    and everything after it, byte for byte."""
+    from tools import corpus_decompose
+
+    md = tmp_path / "SCALING.md"
+    shutil.copy(REPO / "SCALING.md", md)
+    text = md.read_text()
+    attribution = text.index("### pipeline_corpus_build attribution")
+    assert text.index(corpus_decompose._MARK) < attribution
+
+    counts = {"docs": 5000, "final_docs": 4306}
+    rows = [
+        (label, {k: v * f for k, v in counts.items()}, 2.0 * f, 1024 * f, 1024 * f)
+        for label, f in (("1x", 1), ("10x", 10), ("100x", 100))
+    ]
+    corpus_decompose.write_section(md, rows)
+
+    new = md.read_text()
+    assert new.endswith(text[attribution:])
+    assert "| docs | 5000 | 50000 | 500000 | +1.00 | +1.00 |" in new

@@ -171,7 +171,7 @@ def main() -> None:
     for label, path in datasets:
         counts = _stage_counts(spark, path)
         # the real op: the min-wall run of RUNS, with that run's shuffle
-        # bytes and its top stages by shuffle write
+        # bytes
         rec = min(
             (measure(spark, fn, path) for _ in range(RUNS)),
             key=lambda r: r["build_s"] + r["exec_s"],
@@ -179,10 +179,28 @@ def main() -> None:
         wall = rec["build_s"] + rec["exec_s"]
         wr = sum(w for _, w, _ in rec["stages"])
         rd = sum(r for _, _, r in rec["stages"])
-        top = sorted(((w, n) for n, w, _ in rec["stages"]), reverse=True)[:4]
-        rows.append((label, counts, wall, rd, wr, top))
+        rows.append((label, counts, wall, rd, wr))
         print(f"{label}: wall={wall:.2f}s shuffle_wr={fmt_bytes(wr)} {counts}", flush=True)
 
+    write_section(REPO / "SCALING.md", rows)
+    keys = list(rows[0][1])
+    print(
+        json.dumps(
+            {
+                "metric": "corpus_build_decomposition",
+                "wall": [r[2] for r in rows],
+                "shuffle_write_bytes": [r[4] for r in rows],
+                "counts": {k: [r[1][k] for r in rows] for k in keys},
+            }
+        )
+    )
+
+
+def write_section(scaling: Path, rows: list) -> None:
+    """Splice the decomposition table for ``rows`` — one ``(label,
+    stage counts, wall s, shuffle read bytes, shuffle write bytes)`` per
+    dataset, 1x/10x/100x — into ``scaling``. The hand-written attribution
+    below it is its own section and is left as it is."""
     keys = list(rows[0][1])
     lines = [
         _MARK + " (round 8, VERDICT r7 #3)",
@@ -214,25 +232,10 @@ def main() -> None:
         f"| shuffle read | {fmt_bytes(rds[0])} | {fmt_bytes(rds[1])} | {fmt_bytes(rds[2])} "
         f"| {_exp(rds[0], rds[1]):+.2f} | {_exp(rds[1], rds[2]):+.2f} |",
         "",
-        "Top shuffle-write stages at 100x: "
-        + "; ".join(f"{fmt_bytes(b)} — {n[:60]}" for b, n in rows[2][5] if b),
-        "",
     ]
-
     # Shared marker-bounded splice (tools/docsplice.py): same boundary
     # rule as state_scale, with the outside-bytes-preserved guard.
-    splice_section(REPO / "SCALING.md", _MARK, "\n".join(lines) + "\n")
-
-    print(
-        json.dumps(
-            {
-                "metric": "corpus_build_decomposition",
-                "wall": walls,
-                "shuffle_write_bytes": wrs,
-                "counts": {k: [r[1][k] for r in rows] for k in keys},
-            }
-        )
-    )
+    splice_section(scaling, _MARK, "\n".join(lines) + "\n")
 
 
 if __name__ == "__main__":

@@ -46,7 +46,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -57,7 +56,9 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from australis_indexer_spark.fixtures import FIXTURE_START_HEIGHT
 from tools.docsplice import fmt_bytes, splice_section
+from australis_indexer_spark.scratch import scratch_dir
 from australis_indexer_spark.session import get_session
+from australis_indexer_spark.streaming.pipeline import start_drained, stream_session
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -89,16 +90,14 @@ def _write_batch_file(df, src: str, stamped: set, batch_idx: int) -> None:
 def _drain(stream_df, out_dir: str, ckpt: str, mode: str = "update"):
     """Run one availableNow pass (maxFilesPerTrigger=1 upstream makes each
     source file its own micro-batch) and return per-batch state metrics."""
-    q = (
+    q = start_drained(
         stream_df.writeStream.foreachBatch(
             lambda b, _id: b.write.mode("append").parquet(out_dir)
         )
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     rows = []
     cum = 0
     for p in q.recentProgress:
@@ -261,14 +260,11 @@ SCENARIOS = {
 
 
 def main() -> int:
-    spark = get_session("state_scale")
-    prev = None
-    try:
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    except Exception:  # noqa: BLE001 — unset
-        prev = None
+    # the scenarios run on the ops' streaming session: the same state
+    # partition width, with RocksDB set on that clone only
+    spark = stream_session(get_session("state_scale"))
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    base = tempfile.mkdtemp(prefix="aispark_state_scale_")
+    base = scratch_dir(prefix="aispark_state_scale_")
     lines = [
         _MARK,
         "",
@@ -299,35 +295,29 @@ def main() -> int:
         "|---|---|---|---|---|---|",
     ]
     failures: list[str] = []
-    try:
-        for name, fn in SCENARIOS.items():
-            rows, bound, bound_desc = fn(spark, base)
-            assert rows, f"{name}: no stateful progress captured"
-            for batch_id, n_in, cum, n_state, sst in rows:
-                lines.append(
-                    f"| {name} | {batch_id} | {n_in} | {cum} | {n_state} "
-                    f"| {fmt_bytes(sst)} |"
-                )
-            final_state = rows[-1][3]
-            peak_state = max(r[3] for r in rows)
-            cum_in = rows[-1][2]
-            verdict = "PASS" if peak_state <= bound else "FAIL"
-            if verdict == "FAIL":
-                failures.append(name)
+    for name, fn in SCENARIOS.items():
+        rows, bound, bound_desc = fn(spark, base)
+        assert rows, f"{name}: no stateful progress captured"
+        for batch_id, n_in, cum, n_state, sst in rows:
             lines.append(
-                f"| {name} | — | — | {cum_in} | peak {peak_state} "
-                f"(bound {bound}: {bound_desc}) **{verdict}** | |"
+                f"| {name} | {batch_id} | {n_in} | {cum} | {n_state} "
+                f"| {fmt_bytes(sst)} |"
             )
-            print(
-                f"{verdict} {name}: peak state {peak_state} <= bound {bound} "
-                f"({bound_desc}); cumulative input {cum_in}; "
-                f"final state {final_state}"
-            )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+        final_state = rows[-1][3]
+        peak_state = max(r[3] for r in rows)
+        cum_in = rows[-1][2]
+        verdict = "PASS" if peak_state <= bound else "FAIL"
+        if verdict == "FAIL":
+            failures.append(name)
+        lines.append(
+            f"| {name} | — | — | {cum_in} | peak {peak_state} "
+            f"(bound {bound}: {bound_desc}) **{verdict}** | |"
+        )
+        print(
+            f"{verdict} {name}: peak state {peak_state} <= bound {bound} "
+            f"({bound_desc}); cumulative input {cum_in}; "
+            f"final state {final_state}"
+        )
     lines.append("")
 
     scaling = Path(__file__).resolve().parent.parent / "SCALING.md"

@@ -8,11 +8,11 @@ with LZ4F or Zstd (main.rs:366-372), decoding on the consumer side
 Spark mapping: these are the one genuinely Python-side surface in the engine
 (everything else is JVM built-ins), so they are exposed as **Arrow-batched
 pandas UDFs** — one Python invocation per Arrow batch, not per row. The CBOR
-codec is a self-contained RFC 8949 subset implementation (the `cbor2` wheel
-is not in this container). All three wire codecs execute everywhere:
-pyarrow (a hard dependency) bundles the standard LZ4 Frame and Zstd codecs,
-and stdlib zlib sits alongside (at rest, parquet zstd covers the reference's
-storage-compression natively).
+codec is a self-contained RFC 8949 subset implementation, so the package
+needs no `cbor2` dependency. The compression codecs are library calls: zlib
+from the stdlib, LZ4F and Zstd frames encoded and decoded by the liblz4 and
+libzstd that pyarrow (a hard dependency) bundles. At rest, parquet zstd
+covers the reference's storage compression natively.
 """
 
 from __future__ import annotations
@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
 
 import pyarrow as _pa
-
-from .lz4frame import lz4f_decompress
 
 # ---------------------------------------------------------------------------
 # Minimal CBOR (RFC 8949) — the subset the envelope/message model needs:
@@ -197,55 +195,35 @@ def _dec(buf: memoryview, off: int, depth: int = 0) -> tuple[Any, int]:
 
 
 # ---------------------------------------------------------------------------
-# Compression (C6/C7). zlib is the always-available codec; LZ4F/Zstd run the
-# reference's exact wire formats in EVERY environment — native wheels when
-# installed, else pyarrow's bundled lz4/zstd libraries.
+# Compression (C6/C7). zlib from the stdlib; LZ4F and ZSTD through the liblz4
+# and libzstd that pyarrow bundles, in both directions: standard LZ4 frames
+# (magic 0x184D2204) and Zstd frames (magic 0xFD2FB528), the reference's exact
+# wire formats (borealis-indexer/src/main.rs:369-370).
 
-def _zstd_frame_content_size(blob: bytes) -> int:
-    """Frame_Content_Size from a zstd frame header (RFC 8878 §3.1.1) —
-    what ZSTD_getFrameContentSize reads. One-shot compressors (including
-    pyarrow's bundled libzstd below) always pledge the size, so it is
-    present in every frame this engine produces; streaming frames that
-    omit it are rejected explicitly rather than guessed at."""
-    if len(blob) < 5 or struct.unpack_from("<I", blob, 0)[0] != 0xFD2FB528:
-        raise ValueError("zstd: bad magic")
-    fhd = blob[4]
-    fcs_flag, single_segment = fhd >> 6, (fhd >> 5) & 1
-    i = 5 + (0 if single_segment else 1)  # Window_Descriptor
-    i += (0, 1, 2, 4)[fhd & 3]  # Dictionary_ID
+
+def _read_frames(b: bytes, codec: str) -> bytes:
+    """Decode a whole LZ4 or Zstd payload with pyarrow's streaming reader:
+    the library's frame decoder checks the frame's own checksums and block
+    bounds, decodes concatenated frames back to back and rejects trailing
+    bytes. Malformed input raises ValueError (the mp4.py convention); the
+    reader alone would return b"" for empty input."""
+    if not b:
+        raise ValueError(f"{codec}: empty frame")
     try:
-        if fcs_flag == 0:
-            if not single_segment:
-                raise ValueError("zstd: frame does not carry content size")
-            return blob[i]
-        if fcs_flag == 1:
-            return struct.unpack_from("<H", blob, i)[0] + 256
-        if fcs_flag == 2:
-            return struct.unpack_from("<I", blob, i)[0]
-        return struct.unpack_from("<Q", blob, i)[0]
-    except (IndexError, struct.error) as e:
-        # malformed input always raises ValueError (mp4.py convention)
-        raise ValueError(f"zstd: truncated frame header ({e})") from e
+        return _pa.CompressedInputStream(_pa.BufferReader(b), codec).read()
+    except OSError as e:
+        raise ValueError(f"{codec}: {e}") from e
 
 
-# LZ4F: pyarrow's bundled lz4 library encodes real LZ4 frames (compressed
-# blocks, real match sequences); the self-contained full-spec frame DECODER
-# (lz4frame.py) reads them back — pyarrow's own decompress demands the
-# content size up front, which LZ4F frames don't always carry, while our
-# decoder parses any compliant frame. Every roundtrip therefore
-# cross-verifies the spec decoder against a real encoder.
-# ZSTD: pyarrow bundles libzstd (standard frames, magic 0xFD2FB528 — the
-# reference's exact wire format, borealis-indexer/src/main.rs:370).
-# Decompression reads the frame's pledged content size from the header
-# (helper above), the piece pyarrow's Codec API leaves to the caller.
 CODECS: dict[str, tuple[Any, Any]] = {
     "ZLIB": (zlib.compress, zlib.decompress),
-    "LZ4F": (lambda b: _pa.Codec("lz4").compress(b, asbytes=True), lz4f_decompress),
+    "LZ4F": (
+        lambda b: _pa.Codec("lz4").compress(b, asbytes=True),
+        lambda b: _read_frames(b, "lz4"),
+    ),
     "ZSTD": (
         lambda b: _pa.Codec("zstd").compress(b, asbytes=True),
-        lambda b: _pa.Codec("zstd").decompress(
-            b, _zstd_frame_content_size(bytes(b)), asbytes=True
-        ),
+        lambda b: _read_frames(b, "zstd"),
     ),
 }
 

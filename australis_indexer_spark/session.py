@@ -104,18 +104,6 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # the driver's events.parquet carries INT64 TIMESTAMP(NANOS) which Spark
     # has no native type for; read as LongType ns and convert in the loader
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # scan-split knobs, env-parameterised for profiling against multi-row-
-    # group data copies (tools/make_mrg_testdata.py). Defaults ARE Spark's
-    # defaults — the driver's bench runs are byte-identical in config; a
-    # profiling run sets these low so multi-row-group files split across
-    # cores and the 8-vs-32-core probe measures operators, not the
-    # single-row-group scan serialization (VERDICT r10 "scaling signal").
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"
-    ),
-    "spark.sql.files.openCostInBytes": os.environ.get(
-        "SPARK_GRAFT_OPEN_COST_BYTES", "4194304"
-    ),
 }
 
 # The 100 TB / 1000-executor knob set. Not applied in local mode (most are

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..scratch import scratch_dir
-from ..fixtures import FIXTURE_BLOCKS, blocks_df
+from ..fixtures import FIXTURE_BLOCKS, blocks_df, gen_blocks
 from ..operators import fixture_oracles as FO
 from ..registry import op
 from ..schemas import STREAMER_SCHEMA
@@ -66,7 +66,9 @@ def write_stream_source(
     test stand-in for the node's channel (one file ≈ one channel burst)."""
     if os.path.isdir(out_dir) and any(f.endswith(".json") for f in os.listdir(out_dir)):
         return
-    blocks_df(spark, n_blocks).repartitionByRange(
+    # not fixtures.blocks_df: the source is written once, so a frame cached
+    # for the session would only stay behind in the caller's CacheManager
+    spark.createDataFrame(gen_blocks(n_blocks), STREAMER_SCHEMA).repartitionByRange(
         n_files, "block.header.height"
     ).write.mode("overwrite").json(out_dir)
 
@@ -95,9 +97,7 @@ def shared_stream_source(
     d = os.path.join(root, f"stream_src_{n_blocks}x{n_files}")
     if not os.path.isdir(d):
         tmp = tempfile.mkdtemp(prefix="stream_src_build_", dir=root)
-        blocks_df(spark, n_blocks).repartitionByRange(
-            n_files, "block.header.height"
-        ).write.mode("overwrite").json(tmp)
+        write_stream_source(spark, tmp, n_blocks=n_blocks, n_files=n_files)
         try:
             os.rename(tmp, d)
         except OSError:  # lost an in-process race: d now exists

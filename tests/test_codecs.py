@@ -7,6 +7,7 @@ decode on the consumer (borealis-consumer/src/main.rs:260-286).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -60,8 +61,6 @@ def test_cbor_golden_envelope():
 
 
 def test_cbor_rejects_trailing_bytes():
-    import pytest
-
     with pytest.raises(ValueError):
         codecs.cbor_loads(codecs.cbor_dumps(1) + b"\x00")
 
@@ -78,27 +77,16 @@ def test_compression_roundtrip_property(data):
 @given(st.binary(max_size=2048), st.integers(0, 3))
 @settings(max_examples=50, deadline=None)
 def test_lz4f_spec_decoder_vs_real_encoder_property(data, repeat):
-    """Cross-engine property: the self-contained LZ4F spec decoder must
-    invert pyarrow's bundled real encoder on arbitrary payloads (repetition
-    factor drives real match sequences and overlap copies through the
-    block decoder, not just stored literals)."""
+    """The registered LZ4F decoder inverts pyarrow's bundled encoder on
+    arbitrary payloads (the repetition factor drives real match sequences
+    and overlap copies through the block decoder, not just stored
+    literals)."""
     import pyarrow as pa
 
-    from australis_indexer_spark.functions.lz4frame import lz4f_decompress
-
     payload = data * (repeat + 1)
-    assert lz4f_decompress(
-        pa.Codec("lz4").compress(payload, asbytes=True)
+    assert codecs.decompress(
+        pa.Codec("lz4").compress(payload, asbytes=True), "LZ4F"
     ) == payload
-
-
-def test_xxh32_known_vectors():
-    """xxHash32 pinned to the published test vectors (xxHash spec repo) —
-    the frame checksums below are only as good as this hash."""
-    from australis_indexer_spark.functions.lz4frame import xxh32
-
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"abc") == 0x32D153FF
 
 
 # A 60-byte payload whose LZ4 block was HAND-ENCODED from the public block
@@ -114,60 +102,86 @@ _LZ4F_GOLDEN_FRAME = bytes.fromhex(
     "04224d186c403c00000000000000381f000000ff054e45415220626c6f636b7320"
     "73747265616d2e201400105065616d2e2000000000c96561dc"
 )
+# The same block in a frame with a block checksum (FLG 0x74: independent
+# blocks, block + content checksums, no content size); the block checksum
+# sits at bytes 42-45.
+_LZ4F_BLOCK_CHECKSUM_FRAME = bytes.fromhex(
+    "04224d187440bd1f000000ff054e45415220626c6f636b732073747265616d2e2014"
+    "00105065616d2e2090eaacd400000000c96561dc"
+)
+# Spec-built frames of UNCOMPRESSED blocks (bit 31 of the block size set):
+# content size + content checksum, 64 KB independent blocks.
+_LZ4F_STORED_FRAMES = {
+    b"": bytes.fromhex("04224d186c4000000000000000000900000000055dcc02"),
+    b"x": bytes.fromhex("04224d186c40010000000000000049010000807800000000ea30c42e"),
+}
+
+
+def _lz4f_stored_256k() -> tuple[bytes, bytes]:
+    """A 256 KiB payload as four stored 64 KB blocks: the frame header
+    (content size 262144) and the content checksum are the spec-built
+    bytes; the blocks in between are the payload itself."""
+    import struct
+
+    payload = bytes(range(256)) * 1024
+    blocks = b"".join(
+        struct.pack("<I", 0x10000 | 0x80000000) + payload[o : o + 0x10000]
+        for o in range(0, len(payload), 0x10000)
+    )
+    frame = (
+        bytes.fromhex("04224d186c400000040000000000d2")
+        + blocks
+        + bytes(4)  # EndMark
+        + bytes.fromhex("8472a095")
+    )
+    return payload, frame
 
 
 def test_lz4f_golden_frame_decodes():
-    from australis_indexer_spark.functions.lz4frame import lz4f_decompress
-
-    assert lz4f_decompress(_LZ4F_GOLDEN_FRAME) == _LZ4F_GOLDEN_PAYLOAD
+    assert codecs.decompress(_LZ4F_GOLDEN_FRAME, "LZ4F") == _LZ4F_GOLDEN_PAYLOAD
+    assert (
+        codecs.decompress(_LZ4F_BLOCK_CHECKSUM_FRAME, "LZ4F") == _LZ4F_GOLDEN_PAYLOAD
+    )
 
 
 def test_lz4f_checksums_enforced():
-    import pytest
-
-    from australis_indexer_spark.functions.lz4frame import lz4f_decompress
-
     bad = bytearray(_LZ4F_GOLDEN_FRAME)
     bad[-1] ^= 0xFF  # corrupt content checksum
-    with pytest.raises(ValueError, match="content checksum"):
-        lz4f_decompress(bytes(bad))
+    with pytest.raises(ValueError, match="contentChecksum"):
+        codecs.decompress(bytes(bad), "LZ4F")
     bad = bytearray(_LZ4F_GOLDEN_FRAME)
     bad[14] ^= 0xFF  # corrupt header checksum byte
-    with pytest.raises(ValueError, match="header checksum"):
-        lz4f_decompress(bytes(bad))
+    with pytest.raises(ValueError, match="headerChecksum"):
+        codecs.decompress(bytes(bad), "LZ4F")
+    bad = bytearray(_LZ4F_BLOCK_CHECKSUM_FRAME)
+    bad[42] ^= 0xFF  # corrupt block checksum
+    with pytest.raises(ValueError, match="blockChecksum"):
+        codecs.decompress(bytes(bad), "LZ4F")
 
 
 def test_lz4f_roundtrip_and_wire_branch_registered():
-    """The LZ4F CODECS branch always runs now: real wheel when present,
-    else the self-contained frame codec — never silently absent."""
-    from australis_indexer_spark.functions.lz4frame import (
-        lz4f_compress,
-        lz4f_decompress,
-    )
-
+    """The LZ4F CODECS branch is always registered, decodes spec-built
+    stored-block frames, and round-trips payloads on both sides of the
+    64 KB block size."""
     assert "LZ4F" in codecs.CODECS
-    for payload in (b"", b"x", _LZ4F_GOLDEN_PAYLOAD, bytes(range(256)) * 1024):
-        assert lz4f_decompress(lz4f_compress(payload)) == payload
+    big, big_frame = _lz4f_stored_256k()
+    for payload, frame in (*_LZ4F_STORED_FRAMES.items(), (big, big_frame)):
+        assert codecs.decompress(frame, "LZ4F") == payload
+    for payload in (b"", b"x", _LZ4F_GOLDEN_PAYLOAD, big):
         assert codecs.decompress(codecs.compress(payload, "LZ4F"), "LZ4F") == payload
 
 
 def test_lz4f_cross_check_real_wheel():
     """When the real `lz4` wheel exists, both directions must interoperate
     with it; recorded skip otherwise (wheel not in this container)."""
-    import pytest
-
     try:
         import lz4.frame as real
     except ImportError:
         pytest.skip("lz4 wheel absent: cross-check runs where it is installed")
-    from australis_indexer_spark.functions.lz4frame import (
-        lz4f_compress,
-        lz4f_decompress,
-    )
 
     payload = _LZ4F_GOLDEN_PAYLOAD * 100
-    assert real.decompress(lz4f_compress(payload)) == payload
-    assert lz4f_decompress(real.compress(payload)) == payload
+    assert real.decompress(codecs.compress(payload, "LZ4F")) == payload
+    assert codecs.decompress(real.compress(payload), "LZ4F") == payload
     assert real.decompress(_LZ4F_GOLDEN_FRAME) == _LZ4F_GOLDEN_PAYLOAD
 
 
@@ -189,48 +203,70 @@ def test_zstd_branch_always_registered():
     assert "ZSTD" in codecs.CODECS
     for payload in (b"", b"x", _ZSTD_GOLDEN_PAYLOAD, bytes(range(256)) * 1024):
         assert codecs.decompress(codecs.compress(payload, "ZSTD"), "ZSTD") == payload
+    # every frame-content-size layout libzstd emits (1-byte single-segment,
+    # 2-byte biased, 4-byte): payload sizes across the encoding breakpoints
+    for n in (0, 1, 17, 255, 256, 300, 65536 + 255, 65536 + 256, 200_000):
+        assert codecs.decompress(codecs.compress(b"z" * n, "ZSTD"), "ZSTD") == b"z" * n, n
     # compressed output is a standard zstd frame, magic first
     assert codecs.compress(b"abc" * 100, "ZSTD")[:4] == bytes.fromhex("28b52ffd")
 
 
 def test_zstd_golden_frame():
     """The hand-built RFC 8878 raw-block golden frame decodes through the
-    REGISTERED branch (whichever real libzstd backs it) — pins the wire
-    bytes against both the frame-header parser and the decoder."""
+    REGISTERED branch — pins the wire bytes against libzstd's decoder."""
     assert codecs.decompress(_ZSTD_GOLDEN_FRAME, "ZSTD") == _ZSTD_GOLDEN_PAYLOAD
 
 
-def test_zstd_frame_content_size_parser():
-    """The header parser reads the pledged content size for every FCS
-    layout libzstd actually emits (1-byte single-segment, 2-byte biased,
-    4-byte) — sweep payload sizes across the encoding breakpoints."""
-    for n in (0, 1, 17, 255, 256, 300, 65536 + 255, 65536 + 256, 200_000):
-        frame = codecs.compress(b"z" * n, "ZSTD")
-        assert codecs._zstd_frame_content_size(frame) == n, n
-
-
 def test_lz4f_cross_check_bundled_encoder():
-    """Always-on interop (pyarrow bundles real lz4): the self-contained
-    spec decoder must decode REAL compressed frames (match sequences,
-    overlap copies — not just our own raw-block output), and the real
-    decoder must accept our spec-valid frames."""
+    """Always-on interop (pyarrow bundles real lz4): the registered decoder
+    reads REAL compressed frames (match sequences, overlap copies), and
+    pyarrow's one-shot decoder agrees with it on a spec-built stored-block
+    frame."""
     import pyarrow as pa
-
-    from australis_indexer_spark.functions.lz4frame import (
-        lz4f_compress,
-        lz4f_decompress,
-    )
 
     payload = _LZ4F_GOLDEN_PAYLOAD * 200  # repetitive => real match sequences
     real_frame = pa.Codec("lz4").compress(payload, asbytes=True)
     assert len(real_frame) < len(payload) // 10  # actually compressed
-    assert lz4f_decompress(real_frame) == payload
-    assert (
-        pa.Codec("lz4").decompress(
-            lz4f_compress(payload), len(payload), asbytes=True
-        )
-        == payload
-    )
+    assert codecs.decompress(real_frame, "LZ4F") == payload
+    big, big_frame = _lz4f_stored_256k()
+    assert pa.Codec("lz4").decompress(big_frame, len(big), asbytes=True) == big
+
+
+@pytest.mark.parametrize("codec", ["LZ4F", "ZSTD"])
+def test_concatenated_frames_decode_to_joined_payloads(codec):
+    """Both frame formats allow frames back to back in one stream; the
+    decoder returns every frame's content, not just the first."""
+    first, second = b"first frame " * 40, bytes(range(256)) * 3
+    blob = codecs.compress(first, codec) + codecs.compress(second, codec)
+    assert codecs.decompress(blob, codec) == first + second
+
+
+@pytest.mark.parametrize("codec", ["LZ4F", "ZSTD"])
+def test_trailing_bytes_after_frame_rejected(codec):
+    frame = codecs.compress(b"payload " * 40, codec)
+    with pytest.raises(ValueError):
+        codecs.decompress(frame + b"garbage!!", codec)
+
+
+@pytest.mark.parametrize("codec", ["LZ4F", "ZSTD"])
+def test_empty_frame_rejected(codec):
+    """An empty payload is not a frame (pyarrow's reader alone returns
+    b"" for it)."""
+    with pytest.raises(ValueError):
+        codecs.decompress(b"", codec)
+
+
+def test_zstd_oversized_content_size_rejected_fast():
+    """A 17-byte single-segment frame that pledges 2^40 content bytes (one
+    RLE block follows) is refused before any output buffer is sized, not
+    answered with a terabyte allocation."""
+    import time
+
+    frame = bytes.fromhex("28b52ffde000000000000100002b000061")
+    t0 = time.time()
+    with pytest.raises(ValueError, match="too much memory"):
+        codecs.decompress(frame, "ZSTD")
+    assert time.time() - t0 < 1.0
 
 
 def test_large_int_survives():
@@ -279,21 +315,22 @@ def test_cbor_malformed_exception_contract():
 
 
 def test_lz4f_malformed_exception_contract():
-    from australis_indexer_spark.functions.lz4frame import lz4f_decompress
-
     # compressible payload → the registered real encoder emits genuine
     # match sequences, so the corruption sweep exercises the block
     # decompressor's literal/match paths, not just stored blocks
     payload = bytes(range(256)) * 4 + b"A" * 512
-    frame = bytes(codecs.CODECS["LZ4F"][0](payload))
-    assert lz4f_decompress(frame) == payload  # sweep baseline is valid
-    _sweep_value_error_only(lz4f_decompress, frame)
+    frame = codecs.compress(payload, "LZ4F")
+    assert codecs.decompress(frame, "LZ4F") == payload  # sweep baseline is valid
+    for blob in (frame, _LZ4F_GOLDEN_FRAME, _LZ4F_BLOCK_CHECKSUM_FRAME):
+        _sweep_value_error_only(lambda b: codecs.decompress(b, "LZ4F"), blob)
 
 
-def test_zstd_header_malformed_exception_contract():
-    frame = bytes(codecs.CODECS["ZSTD"][0](b"hello zstd frame content size"))
-    # the header parser only reads the first few bytes; sweep a prefix
-    _sweep_value_error_only(codecs._zstd_frame_content_size, frame[:24])
+def test_zstd_malformed_exception_contract():
+    payload = bytes(range(256)) * 4 + b"A" * 512
+    frame = codecs.compress(payload, "ZSTD")
+    assert codecs.decompress(frame, "ZSTD") == payload  # sweep baseline is valid
+    for blob in (frame, _ZSTD_GOLDEN_FRAME):
+        _sweep_value_error_only(lambda b: codecs.decompress(b, "ZSTD"), blob)
 
 
 def test_cbor_nesting_depth_capped():
@@ -301,10 +338,6 @@ def test_cbor_nesting_depth_capped():
     not an escaping RecursionError from the recursive decoder (the
     pure-garbage property caps inputs at 300 bytes, below the ~1000-frame
     recursion limit, so CI never reached this region — round-6 review)."""
-    import pytest
-
-    from australis_indexer_spark.functions import codecs
-
     with pytest.raises(ValueError, match="nesting depth"):
         codecs.cbor_loads(b"\x81" * 1500 + b"\x00")
     with pytest.raises(ValueError, match="nesting depth"):
@@ -317,54 +350,35 @@ def test_lz4f_match_amplification_bomb_bounded():
     """A compressed block chaining max-length match sequences amplifies
     ~255x per extension byte; the decoder must fail the moment the block's
     output exceeds the BD-declared max block size (64 KB here) instead of
-    materializing gigabytes byte-by-byte and only then checking the
-    pledged content size (round-6 review; the png IDAT precedent)."""
+    materializing gigabytes and only then checking the pledged content
+    size (round-6 review; the png IDAT precedent)."""
     import struct as _s
     import time as _t
 
-    import pytest
-
-    from australis_indexer_spark.functions import lz4frame as L
-
-    flg = (0b01 << 6) | 0x08  # v01 + content size
-    desc = bytes([flg, 4 << 4]) + _s.pack("<Q", 100)
-    hdr = (
-        _s.pack("<I", 0x184D2204)
-        + desc
-        + bytes([(L.xxh32(desc) >> 8) & 0xFF])
-    )
+    # magic + FLG v01 with content size (100) + BD 64 KB + header checksum
+    hdr = bytes.fromhex("04224d1848406400000000000000cd")
     # one literal 'A', then offset-1 matches extended by 2000 0xFF bytes
     seq = bytes([0x1F, ord("A"), 0x01, 0x00]) + b"\xff" * 2000 + b"\x00"
     frame = hdr + _s.pack("<I", len(seq)) + seq + _s.pack("<I", 0)
     t0 = _t.time()
-    with pytest.raises(ValueError, match="exceeds declared max block size"):
-        L.lz4f_decompress(frame)
+    with pytest.raises(ValueError, match="decompressionFailed"):
+        codecs.decompress(frame, "LZ4F")
     assert _t.time() - t0 < 1.0, "bomb was materialized before rejection"
 
-    # reserved block-max-size codes (0-3) are rejected up front
-    bad_desc = bytes([flg, 1 << 4]) + _s.pack("<Q", 0)
-    bad = (
-        _s.pack("<I", 0x184D2204)
-        + bad_desc
-        + bytes([(L.xxh32(bad_desc) >> 8) & 0xFF])
-        + _s.pack("<I", 0)
-    )
-    with pytest.raises(ValueError, match="reserved block max size"):
-        L.lz4f_decompress(bad)
+    # reserved block-max-size codes (0-3) are rejected up front: BD code 1,
+    # content size 0, then the EndMark
+    bad = bytes.fromhex("04224d18481000000000000000008e00000000")
+    with pytest.raises(ValueError, match="maxBlockSize_invalid"):
+        codecs.decompress(bad, "LZ4F")
 
     # an oversized UNCOMPRESSED block is rejected by the same bound
     data = bytes(range(256)) * 300  # 76,800 bytes > 64 KB
-    desc2 = bytes([0b01 << 6, 4 << 4])
-    hdr2 = (
-        _s.pack("<I", 0x184D2204)
-        + desc2
-        + bytes([(L.xxh32(desc2) >> 8) & 0xFF])
-    )
+    hdr2 = bytes.fromhex("04224d184040c0")  # FLG v01 only, BD 64 KB
     frame2 = (
         hdr2
         + _s.pack("<I", len(data) | 0x80000000)
         + data
         + _s.pack("<I", 0)
     )
-    with pytest.raises(ValueError, match="exceeds declared max block size"):
-        L.lz4f_decompress(frame2)
+    with pytest.raises(ValueError, match="maxBlockSize_invalid"):
+        codecs.decompress(frame2, "LZ4F")

@@ -679,6 +679,30 @@ def test_png_zlib_bomb_bounded():
         decode_png(blob)
 
 
+def _garbage_decoders():
+    """Every decoder the pure-garbage properties feed. The LZ4F and Zstd
+    frame decoders get each blob twice: as is, and behind the codec's magic
+    number, so random bytes also reach the frame-header and block parsers."""
+    from australis_indexer_spark.functions import codecs
+
+    def frame(codec, magic=b""):
+        return lambda b: codecs.decompress(magic + b, codec)
+
+    jpeg, mp4, mp3 = _jpeg_mod(), _mp4_mod(), _mp3_mod()
+    return (
+        decode_png,
+        decode_wav,
+        jpeg.decode_jpeg_gray,
+        mp4.decode_mp4_rawvideo,
+        mp3.decode_mp3_frames,
+        codecs.cbor_loads,
+        frame("LZ4F"),
+        frame("LZ4F", bytes.fromhex("04224d18")),
+        frame("ZSTD"),
+        frame("ZSTD", bytes.fromhex("28b52ffd")),
+    )
+
+
 @given(st.binary(max_size=300))
 @settings(max_examples=300, deadline=None)
 def test_arbitrary_bytes_never_leak_wrong_exception(blob):
@@ -686,19 +710,7 @@ def test_arbitrary_bytes_never_leak_wrong_exception(blob):
     ValueError in every decoder — the sweeps above mutate valid encodes;
     this covers the rest of input space (headers that parse by luck,
     sync-word collisions, random box sizes)."""
-    from australis_indexer_spark.functions import codecs, lz4frame
-
-    jpeg, mp4, mp3 = _jpeg_mod(), _mp4_mod(), _mp3_mod()
-    for decode in (
-        decode_png,
-        decode_wav,
-        jpeg.decode_jpeg_gray,
-        mp4.decode_mp4_rawvideo,
-        mp3.decode_mp3_frames,
-        lz4frame.lz4f_decompress,
-        codecs.cbor_loads,
-        codecs._zstd_frame_content_size,
-    ):
+    for decode in _garbage_decoders():
         try:
             decode(blob)
         except ValueError:
@@ -713,19 +725,7 @@ def test_large_arbitrary_bytes_never_leak_wrong_exception(blob):
     (a ~1500-frame [[[...]]] needs ~1500 input bytes). Fewer examples,
     bigger inputs — covers depth-, multi-block-, and table-expansion-
     dependent regions of every decoder."""
-    from australis_indexer_spark.functions import codecs, lz4frame
-
-    jpeg, mp4, mp3 = _jpeg_mod(), _mp4_mod(), _mp3_mod()
-    for decode in (
-        decode_png,
-        decode_wav,
-        jpeg.decode_jpeg_gray,
-        mp4.decode_mp4_rawvideo,
-        mp3.decode_mp3_frames,
-        lz4frame.lz4f_decompress,
-        codecs.cbor_loads,
-        codecs._zstd_frame_content_size,
-    ):
+    for decode in _garbage_decoders():
         try:
             decode(blob)
         except ValueError:

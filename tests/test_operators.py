@@ -2235,13 +2235,7 @@ def test_ops_leave_no_cachemanager_residue(spark, ops):
       registration replaces one a user registered under that name.
     When checkpointed blocks are freed is up to the JVM's garbage
     collector, so ``getPersistentRDDs`` is not asserted on."""
-    from australis_indexer_spark.streaming.pipeline import shared_stream_source
-
     s = spark.newSession()
-    # the golden stream source is written once per process by whichever op
-    # first reads it; writing it here keeps the fixture frame it caches for
-    # the session (fixtures.blocks_df) out of the count
-    shared_stream_source(s)
     mgr = spark._jsparkSession.sharedState().cacheManager()
     before = mgr.cachedData().size()
 

@@ -506,6 +506,29 @@ def test_stream_session_is_a_clone_with_the_callers_conf(spark):
     assert {t.name for t in s.catalog.listTables() if t.isTemporary} == {"caller_view"}
 
 
+def test_shared_stream_source_caches_nothing(spark, tmp_path, monkeypatch):
+    """The golden stream source is written once per process, so writing it
+    leaves no cached fixture frame in the caller's CacheManager."""
+    from australis_indexer_spark import scratch
+    from australis_indexer_spark.streaming.pipeline import shared_stream_source
+
+    monkeypatch.setattr(scratch, "_ROOT", str(tmp_path))
+    s = spark.newSession()
+    mgr = spark._jsparkSession.sharedState().cacheManager()
+    before = mgr.cachedData().size()
+    try:
+        src = shared_stream_source(s)
+    finally:
+        # createDataFrame makes `s` the JVM thread's active session, and
+        # later tests resolve Python data source names through that session
+        spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(
+            spark._jsparkSession
+        )
+    assert src.startswith(str(tmp_path))
+    assert any(f.endswith(".json") for f in os.listdir(src))
+    assert mgr.cachedData().size() == before
+
+
 def test_rocksdb_state_store_provider(spark, tmp_path):
     """The DEPLOY.md scale posture names RocksDB as the state store; this
     pins that the provider actually runs in this Spark build — a stateful

@@ -6,7 +6,10 @@ VERDICT r10 "scaling signal is capped by the test data"). This tool rewrites
 each table with small row groups (~64 KiB pages / explicit row_group_size)
 so that, combined with a small ``spark.sql.files.maxPartitionBytes``, scans
 split across cores and the 8-vs-32-core probe measures the OPERATORS rather
-than the scan serialization.
+than the scan serialization. Set the split size on the profiling session, e.g.
+``get_session(extra_conf={"spark.sql.files.maxPartitionBytes": "131072",
+"spark.sql.files.openCostInBytes": "0"})``, or run ``tools/diffcheck.py``
+with ``--conf microsplit``.
 
 Content is byte-identical per row (same rows, same order, same arrow schema:
 the table is read once and written back unchanged), so every oracle result

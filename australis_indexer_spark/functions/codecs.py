@@ -5,14 +5,17 @@ The reference serializes each envelope to CBOR or JSON
 with LZ4F or Zstd (main.rs:366-372), decoding on the consumer side
 (borealis-consumer/src/main.rs:260-286).
 
-Spark mapping: these are the one genuinely Python-side surface in the engine
-(everything else is JVM built-ins), so they are exposed as **Arrow-batched
-pandas UDFs** — one Python invocation per Arrow batch, not per row. The CBOR
-codec is a self-contained RFC 8949 subset implementation, so the package
-needs no `cbor2` dependency. The compression codecs are library calls: zlib
-from the stdlib, LZ4F and Zstd frames encoded and decoded by the liblz4 and
-libzstd that pyarrow (a hard dependency) bundles. At rest, parquet zstd
-covers the reference's storage compression natively.
+Spark mapping: this module is the byte-exact Python reference of the wire
+codecs. The CBOR codec is a self-contained RFC 8949 subset implementation,
+so the package needs no `cbor2` dependency. The compression codecs are
+library calls: zlib from the stdlib, LZ4F and Zstd frames encoded and
+decoded by the liblz4 and libzstd that pyarrow (a hard dependency) bundles.
+Every decoder raises ValueError, and only ValueError, on malformed input.
+
+`make_compress_udf`/`make_decompress_udf` give the payload compression as a
+column; `wire_udf` says which engine runs it. The generic JSON <-> CBOR
+columns (`udf_json_to_cbor`, `udf_cbor_to_json`) stay pandas UDFs. At rest,
+parquet zstd covers the reference's storage compression natively.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ import zlib
 from typing import Any
 
 import pandas as pd
+from py4j.java_gateway import JavaClass
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
 
@@ -215,8 +220,26 @@ def _read_frames(b: bytes, codec: str) -> bytes:
         raise ValueError(f"{codec}: {e}") from e
 
 
+def _zlib_decompress(b: bytes) -> bytes:
+    """One whole zlib stream: malformed, empty or truncated input and
+    bytes after the stream's end raise ValueError (`zlib.decompress`
+    raises `zlib.error` and ignores trailing bytes)."""
+    if not b:
+        raise ValueError("ZLIB: empty stream")
+    d = zlib.decompressobj()
+    try:
+        out = d.decompress(b)
+    except zlib.error as e:
+        raise ValueError(f"ZLIB: {e}") from e
+    if not d.eof:
+        raise ValueError("ZLIB: truncated stream")
+    if d.unused_data:
+        raise ValueError("ZLIB: trailing bytes after the stream")
+    return out
+
+
 CODECS: dict[str, tuple[Any, Any]] = {
-    "ZLIB": (zlib.compress, zlib.decompress),
+    "ZLIB": (zlib.compress, _zlib_decompress),
     "LZ4F": (
         lambda b: _pa.Codec("lz4").compress(b, asbytes=True),
         lambda b: _read_frames(b, "lz4"),
@@ -261,21 +284,58 @@ def udf_cbor_to_json(b: pd.Series) -> pd.Series:
     )
 
 
-def make_compress_udf(codec: str):
-    comp = CODECS[codec][0]
+_WIRE_CODECS = "australis_indexer_spark.jvm.WireCodecs"
 
+
+def _jvm_wire_codecs():
+    """``jvm/WireCodecs.java`` in the active session's JVM, or None where
+    that JVM cannot load it."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return None
+    cls = getattr(sc._jvm, _WIRE_CODECS)
+    return cls if isinstance(cls, JavaClass) else None
+
+
+def wire_udf(java_factory: str, *, fallback):
+    """Column -> Column: the UDF that ``WireCodecs.<java_factory>()``
+    returns, wrapped as an unnamed Column, where the session's JVM loads
+    the class; else `fallback`, a pandas UDF over this module's functions.
+
+    This is the one place the engine of a wire codec is chosen. The JVM
+    side (`jvm/WireCodecs.java`) covers ZLIB and the CBOR envelope of
+    `operators/envelope.py`, with the wire bytes and the decode contract of
+    this module, so the codec round trip of `blockstream` starts no Python
+    worker. `get_session()` compiles the class onto the driver's class
+    path; vanilla and cluster sessions do not have it, and the platform,
+    not a flag, picks their pandas path. LZ4F and ZSTD are pandas UDFs in
+    every session."""
+    jvm = _jvm_wire_codecs()
+    if jvm is None:
+        return fallback
+    from pyspark.sql.classic.column import Column, _to_java_column, _to_seq
+
+    judf = getattr(jvm, java_factory)()
+    sc = SparkContext._active_spark_context
+    return lambda col: Column(judf.apply(_to_seq(sc, [col], _to_java_column)))
+
+
+def _pandas_udf(fn):
     @F.pandas_udf(BinaryType())
-    def _c(b: pd.Series) -> pd.Series:
-        return b.map(lambda x: None if x is None else comp(bytes(x)))
+    def _u(b: pd.Series) -> pd.Series:
+        return b.map(lambda x: None if x is None else fn(bytes(x)))
 
-    return _c
+    return _u
+
+
+def make_compress_udf(codec: str):
+    """Column function: `compress(·, codec)` (engine: `wire_udf`)."""
+    udf = _pandas_udf(CODECS[codec][0])
+    return wire_udf("zlibCompressUdf", fallback=udf) if codec == "ZLIB" else udf
 
 
 def make_decompress_udf(codec: str):
-    dec = CODECS[codec][1]
-
-    @F.pandas_udf(BinaryType())
-    def _d(b: pd.Series) -> pd.Series:
-        return b.map(lambda x: None if x is None else dec(bytes(x)))
-
-    return _d
+    """Column function: `decompress(·, codec)` (engine: `wire_udf`);
+    malformed input fails the query."""
+    udf = _pandas_udf(CODECS[codec][1])
+    return wire_udf("zlibDecompressUdf", fallback=udf) if codec == "ZLIB" else udf

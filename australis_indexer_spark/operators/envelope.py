@@ -11,11 +11,14 @@ Spark design:
   column, so ordering/dedup/range-replay are Catalyst ops, not byte-peeking;
 - payload serialization uses the native `to_json`/`from_json` against the
   explicit `STREAMER_SCHEMA` (JVM-side, codegen'd);
-- only the byte-level codecs (CBOR wire form, compression) drop to Python —
-  as Arrow-batched pandas UDFs, the engine's designated slow path.
+- the byte-level codecs, the CBOR wire form of the envelope
+  (`to_wire`/`from_wire`) and payload compression, are the UDFs that
+  `codecs.wire_udf` picks: on `get_session()` the round trip
+  `wrap_envelope → to_wire → from_wire → unwrap_envelope` starts no Python
+  worker.
 
-At 100 TB: wrap/unwrap are narrow ops (no shuffle); codec UDFs stream
-Arrow batches and scale linearly with executors.
+At 100 TB: wrap/unwrap and the wire codecs are narrow per-row expressions
+(no shuffle) and scale linearly with executors.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from ..fixtures import FIXTURE_BLOCKS, blocks_df
 from ..functions import codecs
@@ -73,7 +76,12 @@ def unwrap_envelope(env: DataFrame, *, compression: str | None = "ZLIB") -> Data
 
 # ---------------------------------------------------------------------------
 # CBOR wire form of the whole envelope (C1/C2): one binary blob per message —
-# what would travel on the wire / land in a message-bus sink.
+# what would travel on the wire / land in a message-bus sink. The map of the
+# five `ENVELOPE_SCHEMA` fields in schema order, shortest heads: the bytes of
+# `codecs.cbor_dumps` of the row's dict. These pandas UDFs are the fallback of
+# `codecs.wire_udf`; both paths' decoders take the canonical key order only.
+
+_FIELDS = ENVELOPE_SCHEMA.fieldNames()
 
 
 @F.pandas_udf(BinaryType())
@@ -81,39 +89,62 @@ def _envelope_to_cbor(df: pd.DataFrame) -> pd.Series:
     def enc(row) -> bytes:
         return codecs.cbor_dumps(
             {
-                "sequence_id": int(row.sequence_id),
+                "sequence_id": None if row.sequence_id is None else int(row.sequence_id),
                 "subject": row.subject,
                 "msg_format": row.msg_format,
                 "compression": row.compression,
-                "payload": bytes(row.payload),
+                "payload": None if row.payload is None else bytes(row.payload),
             }
         )
 
     return pd.Series([enc(r) for r in df.itertuples(index=False)])
 
 
-@F.pandas_udf(ENVELOPE_SCHEMA)
+def _canonical_envelope(wire: bytes | None) -> dict | None:
+    if wire is None:
+        return None
+    env = codecs.cbor_loads(bytes(wire))
+    if not isinstance(env, dict) or list(env) != _FIELDS:
+        raise ValueError("from_wire: not the canonical envelope map")
+    return env
+
+
+# any field of a wire may be null, whatever ENVELOPE_SCHEMA says of the rows
+# to_wire is given
+@F.pandas_udf(StructType([StructField(f.name, f.dataType) for f in ENVELOPE_SCHEMA]))
 def _cbor_to_envelope(b: pd.Series) -> pd.DataFrame:
-    rows = [codecs.cbor_loads(bytes(x)) for x in b]
-    return pd.DataFrame(rows, columns=list(ENVELOPE_SCHEMA.fieldNames()))
+    rows = [_canonical_envelope(x) or {} for x in b]
+    # object columns: a null among the ids would make a float64 column
+    return pd.DataFrame(rows, columns=_FIELDS, dtype=object)
 
 
 def to_wire(env: DataFrame) -> DataFrame:
-    """C1: envelope -> CBOR wire bytes (`.to_cbor()`, main.rs:377)."""
+    """C1: envelope -> CBOR wire bytes (`.to_cbor()`, main.rs:377), each row
+    byte-equal to `codecs.cbor_dumps` of the row's dict in schema order."""
+    # the pandas UDF takes sequence_id as decimal(20,0), so Decimal or None:
+    # a long column holding a null reaches pandas as float64, rounded
+    encode = codecs.wire_udf("envelopeEncodeUdf", fallback=lambda s: _envelope_to_cbor(
+        s.withField("sequence_id", s["sequence_id"].cast("decimal(20,0)"))))
     return env.select(
         F.col("sequence_id").alias("key"),
-        _envelope_to_cbor(F.struct(*ENVELOPE_SCHEMA.fieldNames())).alias("wire"),
+        encode(F.struct(*_FIELDS)).alias("wire"),
     )
 
 
 def from_wire(wire: DataFrame) -> DataFrame:
-    """C2: CBOR wire bytes -> envelope (`from_cbor`, consumer main.rs:263)."""
-    return wire.select(_cbor_to_envelope("wire").alias("env")).select("env.*")
+    """C2: CBOR wire bytes -> envelope (`from_cbor`, consumer main.rs:263).
+
+    Takes the canonical key order only (the `ENVELOPE_SCHEMA` order that
+    `to_wire` writes): another key order, another value type, a truncated
+    wire or trailing bytes fail the query. A null wire gives a row of
+    nulls."""
+    decode = codecs.wire_udf("envelopeDecodeUdf", fallback=_cbor_to_envelope)
+    return wire.select(decode("wire").alias("env")).select("env.*")
 
 
 # ---------------------------------------------------------------------------
-# registered ops (fixture-backed; rows-only — byte-level codecs are not
-# SQL-expressible; exactness is asserted in tests/test_envelope.py)
+# registered ops (fixture-backed and rows-only: the payload bytes are
+# engine-specific; wire exactness is asserted in tests/test_envelope.py)
 
 
 @op("project_envelope", tags=("parity", "envelope"), oracle=FO.project_envelope_oracle)

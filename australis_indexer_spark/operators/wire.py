@@ -8,8 +8,8 @@ the coverage checklist maps one-to-one:
   and relational.py)
 - §2.2  `project_unwrap`, `project_reencode`
 - §2.3  `cbor_encode`, `cbor_decode`, `json_encode`, `json_decode`,
-  `compress_roundtrip` (C6/C7 — ZLIB from the stdlib, LZ4F and ZSTD
-  through the liblz4/libzstd that pyarrow bundles)
+  `compress_roundtrip` (C6/C7 — ZLIB, LZ4F and ZSTD through
+  `codecs.make_compress_udf`/`make_decompress_udf`)
 - §2.4  `sink_publish`, `sink_durable`, `sink_console`
 - §2.5  `order_by_height`, `replay_all`
 """
@@ -288,8 +288,8 @@ CROSS JOIN (VALUES {", ".join("('" + c + "')" for c in sorted(codecs.CODECS))})
 @op("compress_roundtrip", tags=("parity", "codec"), oracle=_COMPRESS_ORACLE)
 def compress_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6/C7 compress/decompress over every registered codec — ZLIB,
-    LZ4F and ZSTD, the real wire formats (LZ4 and Zstd frames through the
-    liblz4/libzstd that pyarrow bundles; the reference uses the
+    LZ4F and ZSTD, the real wire formats (zlib streams, LZ4 and Zstd
+    frames; engine: `codecs.wire_udf`; the reference uses the
     `lzzzz`/`zstd` crates, main.rs:369-370; parquet-zstd covers
     compression at rest). One row per (doc, codec): exact byte-level
     round-trip through compress→decompress. Compressed sizes are

@@ -44,10 +44,14 @@ same modes and the same atomic renames. It serves both the FileSystem API
 and commit logs, state store). The FileSystem class it replaces is, on a
 stock pyspark install, Hive's ``ProxyLocalFileSystem`` (found by Hadoop's
 service loader), whose rename does not replace an existing file; neither
-does ``NioLocalFs``. ``get_session()`` compiles it once per
-source and Spark version into the user cache; a host with no JDK compiler
-keeps the stock filesystem. Clusters with libhadoop, HDFS or S3 never fork
-here, so ``CLUSTER_CONF`` and vanilla sessions keep Hadoop's defaults.
+does ``NioLocalFs``. Clusters with libhadoop, HDFS or S3 never fork here,
+so ``CLUSTER_CONF`` and vanilla sessions keep Hadoop's defaults.
+
+The same class directory holds ``jvm/WireCodecs.java``, the JVM side of
+the envelope's wire codecs (see ``functions.codecs.wire_udf``).
+``get_session()`` compiles every ``jvm/*.java`` file in one ``javac`` call,
+once per set of sources and jar versions, into the user cache; a host with
+no JDK compiler keeps the stock filesystem and the pandas codec UDFs.
 """
 
 from __future__ import annotations
@@ -134,7 +138,10 @@ CLUSTER_CONF: dict[str, str] = {
 }
 
 
-_NIO_FS_SOURCE = os.path.join(_PKG_ROOT, "australis_indexer_spark", "jvm", "NioLocalFs.java")
+_JVM_SOURCES = os.path.join(_PKG_ROOT, "australis_indexer_spark", "jvm")
+# what the sources compile against, from the running Spark's jars/ (javac
+# needs the two Scala jars to resolve the overloads of functions.udf)
+_JVM_JARS = ("hadoop-client-api", "spark-sql-api", "scala-library", "scala-reflect")
 _NIO_FS_CLASS = "australis_indexer_spark.jvm.NioLocalFs"
 
 
@@ -148,31 +155,41 @@ def _find_javac() -> str | None:
     return shutil.which("javac")
 
 
-def _nio_local_fs_conf() -> dict[str, str]:
-    """The conf entries that swap in ``NioLocalFs`` (module docstring),
-    compiled on first use into a content-hashed class directory under the
-    user cache; empty when no JDK compiler is found."""
+def _jvm_class_key(sources: list[str], jars: list[str]) -> str:
+    """The class cache's key: every source file's name and bytes, and the
+    name (so the version) of every jar they compile against."""
+    h = hashlib.sha256()
+    for src in sorted(sources):
+        with open(src, "rb") as f:
+            h.update(os.path.basename(src).encode() + b"\0" + f.read() + b"\0")
+    h.update("\0".join(sorted(os.path.basename(j) for j in jars)).encode())
+    return h.hexdigest()[:16]
+
+
+def _jvm_conf() -> dict[str, str]:
+    """The conf entries that put ``jvm/*.java`` on the driver's class path
+    and swap in ``NioLocalFs`` (module docstring). The sources compile in
+    one ``javac`` call on first use, into a content-hashed class directory
+    under the user cache; empty when no JDK compiler is found."""
     javac = _find_javac()
     if javac is None:
         return {}
     from pyspark.find_spark_home import _find_spark_home
 
-    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
-    with open(_NIO_FS_SOURCE, "rb") as f:
-        key = hashlib.sha256(
-            f.read() + "\0".join(os.path.basename(j) for j in jars).encode()
-        ).hexdigest()[:16]
+    sources = sorted(glob.glob(os.path.join(_JVM_SOURCES, "*.java")))
+    jars = sorted(j for name in _JVM_JARS
+                  for j in glob.glob(os.path.join(_find_spark_home(), "jars", f"{name}[-_][0-9]*.jar")))
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
-    classes = os.path.join(cache, "australis_indexer_spark", f"niolocalfs-{key}")
+    classes = os.path.join(cache, "australis_indexer_spark", f"jvm-{_jvm_class_key(sources, jars)}")
     if not os.path.isdir(classes):
         os.makedirs(os.path.dirname(classes), exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="niolocalfs-build-", dir=os.path.dirname(classes))
+        tmp = tempfile.mkdtemp(prefix="jvm-build-", dir=os.path.dirname(classes))
         try:
             # --release 17: Spark 4's minimum, so a newer javac's classes
             # still load in the JVM that spark-class starts
             subprocess.run(
-                [javac, "--release", "17", "-cp", os.pathsep.join(jars),
-                 "-d", tmp, _NIO_FS_SOURCE],
+                [javac, "--release", "17", "-nowarn", "-cp", os.pathsep.join(jars),
+                 "-d", tmp, *sources],
                 check=True,
             )
             try:
@@ -206,7 +223,7 @@ def get_session(
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
-    conf = {**_LOCAL_DEFAULTS, **_nio_local_fs_conf(), **(extra_conf or {})}
+    conf = {**_LOCAL_DEFAULTS, **_jvm_conf(), **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)
     # scale-adaptive, not a constant tuned to one host: one shuffle

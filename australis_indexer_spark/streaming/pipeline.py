@@ -177,9 +177,10 @@ def read_block_stream(
 def to_envelope_stream(blocks: DataFrame) -> DataFrame:
     """P1 on the stream: key by height, carry event-time for watermarking.
 
-    The payload stays a JSON string here (JVM `to_json`); byte-level codecs
-    (CBOR/compression) are batch-side pandas UDFs — keeping the streaming hot
-    path 100% codegen."""
+    The payload stays a JSON string here (JVM `to_json`), so the streaming
+    hot path is 100% codegen. The byte-level codecs (CBOR wire form,
+    compression) are batch-side, in `operators/envelope.py` (engine:
+    `codecs.wire_udf`)."""
     return blocks.select(
         F.col("block.header.height").alias("sequence_id"),
         # integer `div`, not float `/`: ns values sit near 1.6e18, far above

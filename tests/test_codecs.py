@@ -11,6 +11,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pyspark.errors import IllegalArgumentException
+
+from australis_indexer_spark import session
 from australis_indexer_spark.functions import codecs
 
 # JSON-compatible CBOR value space (what the envelope carries)
@@ -241,14 +244,14 @@ def test_concatenated_frames_decode_to_joined_payloads(codec):
     assert codecs.decompress(blob, codec) == first + second
 
 
-@pytest.mark.parametrize("codec", ["LZ4F", "ZSTD"])
+@pytest.mark.parametrize("codec", ["ZLIB", "LZ4F", "ZSTD"])
 def test_trailing_bytes_after_frame_rejected(codec):
     frame = codecs.compress(b"payload " * 40, codec)
     with pytest.raises(ValueError):
         codecs.decompress(frame + b"garbage!!", codec)
 
 
-@pytest.mark.parametrize("codec", ["LZ4F", "ZSTD"])
+@pytest.mark.parametrize("codec", ["ZLIB", "LZ4F", "ZSTD"])
 def test_empty_frame_rejected(codec):
     """An empty payload is not a frame (pyarrow's reader alone returns
     b"" for it)."""
@@ -291,19 +294,37 @@ def test_large_int_survives():
 # ValueError subclass, so it passes by construction).
 
 
-def _sweep_value_error_only(decode, blob, corrupt_step=1):
-    for end in range(len(blob)):
-        try:
-            decode(blob[:end])
-        except ValueError:
-            pass
-    for i in range(0, len(blob), corrupt_step):
+def _malformed_variants(blob):
+    """Every truncated prefix and every single-byte corruption of `blob`."""
+    yield from (blob[:end] for end in range(len(blob)))
+    for i in range(len(blob)):
         bad = bytearray(blob)
         bad[i] ^= 0xFF
+        yield bytes(bad)
+
+
+def _sweep_value_error_only(decode, blob):
+    for variant in _malformed_variants(blob):
         try:
-            decode(bytes(bad))
+            decode(variant)
         except ValueError:
             pass
+
+
+# compressible payload → the registered real encoders emit genuine match
+# sequences, so the corruption sweeps exercise the block decompressors'
+# literal/match paths, not just stored blocks
+_SWEEP_PAYLOAD = bytes(range(256)) * 4 + b"A" * 512
+
+
+def _sweep_blobs(codec: str) -> list[bytes]:
+    """The valid frames each codec's malformed-input sweep starts from."""
+    golden = {
+        "ZLIB": [],
+        "LZ4F": [_LZ4F_GOLDEN_FRAME, _LZ4F_BLOCK_CHECKSUM_FRAME],
+        "ZSTD": [_ZSTD_GOLDEN_FRAME],
+    }[codec]
+    return [codecs.compress(_SWEEP_PAYLOAD, codec), *golden]
 
 
 def test_cbor_malformed_exception_contract():
@@ -314,23 +335,28 @@ def test_cbor_malformed_exception_contract():
     _sweep_value_error_only(codecs.cbor_loads, codecs.cbor_dumps(doc))
 
 
+def _sweep_codec(codec: str) -> None:
+    blobs = _sweep_blobs(codec)
+    assert codecs.decompress(blobs[0], codec) == _SWEEP_PAYLOAD  # sweep baseline is valid
+    for blob in blobs:
+        _sweep_value_error_only(lambda b: codecs.decompress(b, codec), blob)
+
+
 def test_lz4f_malformed_exception_contract():
-    # compressible payload → the registered real encoder emits genuine
-    # match sequences, so the corruption sweep exercises the block
-    # decompressor's literal/match paths, not just stored blocks
-    payload = bytes(range(256)) * 4 + b"A" * 512
-    frame = codecs.compress(payload, "LZ4F")
-    assert codecs.decompress(frame, "LZ4F") == payload  # sweep baseline is valid
-    for blob in (frame, _LZ4F_GOLDEN_FRAME, _LZ4F_BLOCK_CHECKSUM_FRAME):
-        _sweep_value_error_only(lambda b: codecs.decompress(b, "LZ4F"), blob)
+    _sweep_codec("LZ4F")
 
 
 def test_zstd_malformed_exception_contract():
-    payload = bytes(range(256)) * 4 + b"A" * 512
-    frame = codecs.compress(payload, "ZSTD")
-    assert codecs.decompress(frame, "ZSTD") == payload  # sweep baseline is valid
-    for blob in (frame, _ZSTD_GOLDEN_FRAME):
-        _sweep_value_error_only(lambda b: codecs.decompress(b, "ZSTD"), blob)
+    _sweep_codec("ZSTD")
+
+
+def test_zlib_malformed_exception_contract():
+    """ZLIB keeps the one-exception contract too: `zlib.decompress` alone
+    raises zlib.error on garbage and returns the payload of a stream
+    followed by junk."""
+    _sweep_codec("ZLIB")
+    with pytest.raises(ValueError):
+        codecs.decompress(b"garbage-bytes", "ZLIB")
 
 
 def test_cbor_nesting_depth_capped():
@@ -382,3 +408,154 @@ def test_lz4f_match_amplification_bomb_bounded():
     )
     with pytest.raises(ValueError, match="maxBlockSize_invalid"):
         codecs.decompress(frame2, "LZ4F")
+
+
+# --- the JVM codec (jvm/WireCodecs.java) -----------------------------------
+#
+# get_session() compiles WireCodecs onto the driver's class path and the ZLIB
+# columns run it there. These tests call its static zlibCompress and
+# zlibDecompress on the driver: one py4j call per blob, no Spark job. PySpark
+# turns a Java IllegalArgumentException into
+# pyspark.errors.IllegalArgumentException; any other Java exception arrives
+# as another Python type and fails a test.
+
+_needs_javac = pytest.mark.skipif(
+    session._find_javac() is None, reason="no JDK compiler: WireCodecs is not built"
+)
+
+
+@pytest.fixture(scope="module")
+def jvm_zlib(spark):
+    """WireCodecs' static ZLIB functions (in a plain namespace: hypothesis
+    probes its arguments' attributes, which a py4j class would look up in
+    the JVM)."""
+    from types import SimpleNamespace
+
+    cls = codecs._jvm_wire_codecs()
+    assert cls is not None, "WireCodecs did not load in get_session()'s JVM"
+    return SimpleNamespace(compress=cls.zlibCompress, decompress=cls.zlibDecompress,
+                           buffer_size=cls.outputBufferSize)
+
+
+def _jvm_decode(jvm_zlib, blob: bytes) -> bytes | None:
+    """The JVM decode of `blob`, None when it is refused."""
+    try:
+        return bytes(jvm_zlib.decompress(blob))
+    except IllegalArgumentException:
+        return None
+
+
+def _py_decode(blob: bytes) -> bytes | None:
+    try:
+        return codecs.decompress(blob, "ZLIB")
+    except ValueError:
+        return None
+
+
+@_needs_javac
+def test_jvm_zlib_agrees_with_python_on_malformed_sweeps(jvm_zlib):
+    """Every truncated prefix and single-byte corruption of the ZLIB sweep's
+    stream, garbage, and the stream followed by junk: the JVM decoder raises
+    only IllegalArgumentException, and it accepts exactly the variants the
+    Python decoder accepts, with the same bytes."""
+    (stream,) = _sweep_blobs("ZLIB")
+    for variant in (*_malformed_variants(stream), b"garbage-bytes", stream + b"junk"):
+        assert _jvm_decode(jvm_zlib, variant) == _py_decode(variant), variant.hex()
+
+
+@_needs_javac
+def test_jvm_zlib_output_buffer_size_never_negative(jvm_zlib):
+    """The decoder's first output buffer stays in (0, 64 KiB] for every
+    input length, also where four times the length overflows an int."""
+    for n in (0, 1, 16_367, 16_368, 2**29, 2**31 - 1):
+        assert 0 < jvm_zlib.buffer_size(n) <= 1 << 16, n
+    assert jvm_zlib.buffer_size(2**31 - 1) == 1 << 16
+
+
+@_needs_javac
+@given(st.binary(max_size=2048), st.integers(0, 3))
+@settings(max_examples=40, deadline=None)
+def test_jvm_python_zlib_cross_decode_property(jvm_zlib, data, repeat):
+    """JVM-encoded ZLIB decodes in Python and Python-encoded ZLIB decodes
+    on the JVM."""
+    payload = data * (repeat + 1)
+    assert codecs.decompress(bytes(jvm_zlib.compress(payload)), "ZLIB") == payload
+    assert _jvm_decode(jvm_zlib, codecs.compress(payload, "ZLIB")) == payload
+
+
+def test_zstd_pledged_size_mismatch_frame(spark):
+    """Known defect: a frame that pledges 2^31 bytes, has a window
+    descriptor and ends in an empty last block. libzstd's streaming decoder
+    skips the content-size check for it and returns no bytes, in pyarrow's
+    reader (the ZSTD codec of every session) and in the zstd-jni that Spark
+    ships alike, so moving ZSTD to the JVM would not mend it."""
+    frame = bytes.fromhex("28b52ffdc0000000008000000000010000")
+    assert codecs.decompress(frame, "ZSTD") == b""
+    jvm = spark.sparkContext._jvm
+    reader = jvm.com.github.luben.zstd.ZstdInputStreamNoFinalizer(
+        jvm.java.io.ByteArrayInputStream(frame))
+    assert bytes(reader.readAllBytes()) == b""
+
+
+# --- the codec columns, on both paths ---------------------------------------
+#
+# `session`: the columns get_session() plans (ZLIB on the JVM, LZ4F and ZSTD
+# as pandas UDFs); `pandas`: a session whose JVM does not load WireCodecs,
+# forced here by hiding the class.
+
+
+@pytest.fixture(params=["session", "pandas"])
+def column_path(request, spark, monkeypatch):
+    from australis_indexer_spark.registry import ensure_executor_pyfiles
+
+    ensure_executor_pyfiles(spark)
+    if request.param == "pandas":
+        monkeypatch.setattr(codecs, "_jvm_wire_codecs", lambda: None)
+    return request.param
+
+
+@pytest.mark.parametrize("codec", sorted(codecs.CODECS))
+def test_codec_columns_match_python(spark, column_path, codec):
+    """Bytes equal to the Python encoder, an exact round trip, null kept;
+    on `get_session()` the ZLIB columns plan no Python eval node."""
+    comp, dec = codecs.make_compress_udf(codec), codecs.make_decompress_udf(codec)
+    raws = [_SWEEP_PAYLOAD, b"", b"x", None]
+    df = spark.createDataFrame([(i, r) for i, r in enumerate(raws)], "i int, raw binary")
+    out = df.select("i", comp("raw").alias("c")).select("i", "c", dec("c").alias("d"))
+    for r in out.collect():
+        raw = raws[r.i]
+        assert (r.c, r.d) == ((None, None) if raw is None else (codecs.compress(raw, codec), raw))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    on_jvm = column_path == "session" and codec == "ZLIB" and session._find_javac() is not None
+    assert ("EvalPython" not in plan) == on_jvm
+
+
+@pytest.mark.parametrize("codec", sorted(codecs.CODECS))
+def test_codec_columns_fail_on_malformed(spark, column_path, codec):
+    """A decode column over a malformed payload fails the query, never
+    yielding null."""
+    bad = spark.createDataFrame([(b"not a frame",)], "raw binary")
+    with pytest.raises(Exception, match="IllegalArgumentException: ZLIB|ValueError"):
+        bad.select(codecs.make_decompress_udf(codec)("raw")).collect()
+
+
+# 64 KiB stored block, then a compressed block whose one match copies 19
+# bytes from 256 bytes back, inside the first block, then "hello" as literals
+_LZ4F_LINKED_FIRST = bytes(range(256)) * 256
+_LZ4F_LINKED_FRAME = (
+    bytes.fromhex("04224d184040c0")  # FLG: linked blocks (bit 5 clear); BD 64 KB
+    + (len(_LZ4F_LINKED_FIRST) | 0x80000000).to_bytes(4, "little") + _LZ4F_LINKED_FIRST
+    + (10).to_bytes(4, "little") + bytes.fromhex("0f00010050") + b"hello"
+    + bytes(4)
+)
+
+
+def test_lz4f_linked_blocks_decode_on_both_paths(spark, column_path):
+    """liblz4's default frame links its blocks: a block may copy from the
+    one before. Such a frame decodes in Python and through the LZ4F column
+    of either path (lz4-java 1.8.0's frame reader refuses linked blocks,
+    which is one reason LZ4F stays off the JVM)."""
+    want = _LZ4F_LINKED_FIRST + bytes(range(19)) + b"hello"
+    assert codecs.decompress(_LZ4F_LINKED_FRAME, "LZ4F") == want
+    df = spark.createDataFrame([(_LZ4F_LINKED_FRAME,)], "raw binary")
+    assert df.select(codecs.make_decompress_udf("LZ4F")("raw")).first()[0] == want

@@ -295,9 +295,30 @@ def test_filesystem_classes_compile_once_per_cache(fs_probe, tmp_path):
     assert second["fs_class"] == "australis_indexer_spark.jvm.NioLocalFs$Local"
 
 
+def test_class_cache_key_follows_every_jvm_source(tmp_path):
+    """The class directory's key changes when any jvm/*.java source
+    changes or is added, and when a jar they compile against changes
+    version; unchanged inputs give the same key wherever they live."""
+    sources = sorted(Path(session._JVM_SOURCES).glob("*.java"))
+    assert {p.name for p in sources} >= {"NioLocalFs.java", "WireCodecs.java"}
+    copies = [str(shutil.copy(p, tmp_path / p.name)) for p in sources]
+    jars = ["/spark/jars/hadoop-client-api-3.4.2.jar", "/spark/jars/spark-sql-api_2.13-4.1.2.jar"]
+    key = session._jvm_class_key(copies, jars)
+    assert session._jvm_class_key([str(p) for p in sources], jars) == key
+    for copy in map(Path, copies):
+        text = copy.read_bytes()
+        copy.write_bytes(text + b"// edited\n")
+        assert session._jvm_class_key(copies, jars) != key, copy.name
+        copy.write_bytes(text)
+    assert session._jvm_class_key(copies, jars) == key
+    assert session._jvm_class_key(copies, ["/spark/jars/hadoop-client-api-3.4.3.jar", jars[1]]) != key
+    (tmp_path / "Extra.java").write_text("class Extra {}\n")
+    assert session._jvm_class_key([*copies, str(tmp_path / "Extra.java")], jars) != key
+
+
 def test_no_jdk_compiler_keeps_stock_filesystem(monkeypatch):
     monkeypatch.setattr(session, "_find_javac", lambda: None)
-    assert session._nio_local_fs_conf() == {}
+    assert session._jvm_conf() == {}
     assert not set(_NIO_KEYS) & set(session._LOCAL_DEFAULTS)
 
 
